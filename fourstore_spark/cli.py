@@ -37,16 +37,14 @@ def _spark():
 
 
 def _swap_store(spark, quads, store: str) -> None:
-    """Write-new-then-rename: a store can't be overwritten while its own
+    """Write-new-then-swap: a store can't be overwritten while its own
     parquet files feed the plan."""
-    import shutil
-
+    from fourstore_spark import layout
     from fourstore_spark.store import write_store
 
-    tmp = store.rstrip("/") + ".tmp"
-    write_store(quads, tmp)
-    shutil.rmtree(store, ignore_errors=True)
-    os.rename(tmp, store)
+    staged = layout.staging(store)
+    write_store(quads, staged)
+    layout.replace(store, staged)
 
 
 def _engine(spark, store: str):
@@ -166,6 +164,14 @@ def main(argv: list[str] | None = None) -> int:
     txn.add_argument("files", nargs="+")
 
     args = ap.parse_args(argv)
+
+    if args.cmd in ("import", "update", "delete-model", "restore",
+                    "transaction"):
+        # a store swap a crash interrupted is finished before the store
+        # is read: an import must not rebuild from a missing store
+        from fourstore_spark import layout
+
+        layout.recover(args.store)
 
     if args.cmd == "info":
         # 4s-info / backend-info (src/frontend/4s-info.c,

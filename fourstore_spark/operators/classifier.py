@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fourstore_spark import layout
+
 from .sampling import _MOD, _grams_expr, hash_bucket
 
 MICRO = 1_000_000.0
@@ -362,32 +364,26 @@ def save_classifier(
     table + JSON sidecar pinning the hyperparameters the scorer must
     reuse — a different n_features would silently remap every
     feature)."""
-    import json
     import os
 
     weights.write.mode("overwrite").parquet(os.path.join(path, "weights"))
-    with open(os.path.join(path, "_classifier.json"), "w",
-              encoding="utf-8") as fh:
-        json.dump(
-            {
-                "bias_micro": int(bias_micro),
-                "n_features": int(n_features),
-                "threshold_micro": int(threshold_micro),
-                "features": "word unigram+bigram, md5 hash_bucket",
-                "pooling": "mean",
-            },
-            fh,
-        )
+    layout.write_json(
+        os.path.join(path, "_classifier.json"),
+        {
+            "bias_micro": int(bias_micro),
+            "n_features": int(n_features),
+            "threshold_micro": int(threshold_micro),
+            "features": "word unigram+bigram, md5 hash_bucket",
+            "pooling": "mean",
+        },
+    )
 
 
 def load_classifier(spark, path: str):
     """-> (weights DataFrame, sidecar dict)."""
-    import json
     import os
 
-    with open(os.path.join(path, "_classifier.json"),
-              encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = layout.read_json(os.path.join(path, "_classifier.json"))
     return spark.read.parquet(os.path.join(path, "weights")), meta
 
 
@@ -630,7 +626,6 @@ def save_langid(
     sidecar written LAST (a crashed save rebuilds instead of serving a
     half-artifact). Scoring under a different n_features would hash
     grams into different buckets — the sidecar is the contract."""
-    import json
     import os
 
     weights.write.mode("overwrite").parquet(
@@ -640,28 +635,23 @@ def save_langid(
     labels = sorted(
         r["lang"] for r in biases.select("lang").distinct().collect()
     )
-    with open(
-        os.path.join(path, "_langid.json"), "w", encoding="utf-8"
-    ) as fh:
-        json.dump(
-            {
-                "n_features": int(n_features),
-                "labels": labels,
-                "features": "word unigram+bigram, md5 hash_bucket",
-                "pooling": "mean",
-            },
-            fh,
-        )
+    layout.write_json(
+        os.path.join(path, "_langid.json"),
+        {
+            "n_features": int(n_features),
+            "labels": labels,
+            "features": "word unigram+bigram, md5 hash_bucket",
+            "pooling": "mean",
+        },
+    )
 
 
 def load_langid(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
     """-> (weights, biases, n_features). Feed n_features to
     langid_scores/langid_predict — never a default."""
-    import json
     import os
 
-    with open(os.path.join(path, "_langid.json"), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = layout.read_json(os.path.join(path, "_langid.json"))
     return (
         spark.read.parquet(os.path.join(path, "weights")),
         spark.read.parquet(os.path.join(path, "biases")),

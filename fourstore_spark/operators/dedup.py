@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fourstore_spark import layout
+
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
     """Keep one representative (min id) per distinct content.
@@ -1020,7 +1022,6 @@ def write_lsh_index(
     candidates by signature agreement without the corpus text. One
     exchange per sub-table at write time; every later query batch
     reads only its own buckets'/candidates' dirs."""
-    import json
     import os
 
     sig = minhash_signatures(
@@ -1030,38 +1031,26 @@ def write_lsh_index(
     banded = _bands_from_sig(
         sig, num_hashes=num_hashes, bands=bands
     ).withColumn("pdir", F.pmod(F.col("bucket"), F.lit(n_dirs)).cast("int"))
-    (
-        banded.repartition("pdir")
-        .write.mode("overwrite")
-        .partitionBy("pdir")
-        .parquet(os.path.join(path, "bands"))
+    layout.write_partitioned(banded, os.path.join(path, "bands"), "pdir")
+    layout.write_partitioned(
+        _sig_rows(sig, num_hashes, n_dirs), os.path.join(path, "sigs"), "sdir"
     )
-    (
-        _sig_rows(sig, num_hashes, n_dirs)
-        .repartition("sdir")
-        .write.mode("overwrite")
-        .partitionBy("sdir")
-        .parquet(os.path.join(path, "sigs"))
+    layout.write_json(
+        os.path.join(path, "_lsh.json"),
+        {
+            "num_hashes": int(num_hashes),
+            "bands": int(bands),
+            "shingle_k": int(shingle_k),
+            "n_dirs": int(n_dirs),
+            "hash": "xxhash64 shingles, rotate-xor derivation",
+        },
     )
-    with open(os.path.join(path, "_lsh.json"), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "num_hashes": int(num_hashes),
-                "bands": int(bands),
-                "shingle_k": int(shingle_k),
-                "n_dirs": int(n_dirs),
-                "hash": "xxhash64 shingles, rotate-xor derivation",
-            },
-            fh,
-        )
 
 
 def _read_lsh_meta(path: str) -> dict:
-    import json
     import os
 
-    with open(os.path.join(path, "_lsh.json"), encoding="utf-8") as fh:
-        return json.load(fh)
+    return layout.read_json(os.path.join(path, "_lsh.json"))
 
 
 def append_lsh_index(
@@ -1088,18 +1077,14 @@ def append_lsh_index(
     ).withColumn(
         "pdir", F.pmod(F.col("bucket"), F.lit(m["n_dirs"])).cast("int")
     )
-    (
-        banded.repartition("pdir")
-        .write.mode("append")
-        .partitionBy("pdir")
-        .parquet(os.path.join(path, "bands"))
+    layout.write_partitioned(
+        banded, os.path.join(path, "bands"), "pdir", mode="append"
     )
-    (
-        _sig_rows(sig, m["num_hashes"], m["n_dirs"])
-        .repartition("sdir")
-        .write.mode("append")
-        .partitionBy("sdir")
-        .parquet(os.path.join(path, "sigs"))
+    layout.write_partitioned(
+        _sig_rows(sig, m["num_hashes"], m["n_dirs"]),
+        os.path.join(path, "sigs"),
+        "sdir",
+        mode="append",
     )
 
 
@@ -1216,27 +1201,16 @@ def lsh_query_index(
 def compact_lsh_index(spark, path: str) -> None:
     """Small-files maintenance after many appends — one file set per
     directory in both sub-tables, query results identical (the
-    compact_bm25_index / compact_ivf_index discipline; local-rename
-    swap, quiesce writers, manifest swap on an object store).
-    Duplicate rows from replayed at-least-once appends collapse here
-    (distinct — a replayed append rewrites identical rows by
-    construction, in both sub-tables)."""
+    compact_bm25_index / compact_ivf_index discipline; swap and crash
+    recovery as in ``layout``). Duplicate rows from replayed
+    at-least-once appends collapse here (distinct — a replayed append
+    rewrites identical rows by construction, in both sub-tables)."""
     import os
-    import shutil
 
     for sub, key in (("bands", "pdir"), ("sigs", "sdir")):
-        src = os.path.join(path, sub)
-        tmp, old = src + ".compact", src + ".old"
-        df = spark.read.parquet(src).distinct()
-        (
-            df.repartition(key)
-            .write.mode("overwrite")
-            .partitionBy(key)
-            .parquet(tmp)
+        layout.rewrite(
+            spark, os.path.join(path, sub), key, lambda df: df.distinct()
         )
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
 
 
 def edit_distance_pairs(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fourstore_spark import layout
+
 __all__ = [
     "lm_tokens",
     "unigram_counts",
@@ -544,7 +546,6 @@ def write_bm25_index(
     at 100 TB — the default 64 suits the test scales); more buckets =
     finer pruning AND more write parallelism, at the cost of more
     files per append (compact_bm25_index is the counterweight)."""
-    import json
     import os
 
     from .sampling import hash_bucket
@@ -565,36 +566,24 @@ def write_bm25_index(
         .agg(F.count("*").alias("tf"))
         .withColumn("bucket", (hash_bucket(F.col("term")) % n_buckets))
     )
-    (
-        tf.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
+    layout.write_partitioned(tf, os.path.join(path, "postings"), "bucket")
     dfreq = (
         tf.groupBy("term", "bucket")
         .agg(F.count_distinct("doc_id").alias("df"))
     )
-    (
-        dfreq.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "df"))
+    layout.write_partitioned(dfreq, os.path.join(path, "df"), "bucket")
+    layout.write_json(
+        os.path.join(path, "_bm25_stats.json"),
+        {
+            "n_docs": stats["n_docs"],
+            "avgdl": stats["avgdl"],
+            # exact integer: lets append_bm25_index recompute avgdl
+            # as (sum_dl + delta) / (n_docs + delta) with the SAME
+            # IEEE division Spark's avg performs
+            "sum_dl": stats["sum_dl"],
+            "n_buckets": n_buckets,
+        },
     )
-    with open(os.path.join(path, "_bm25_stats.json"), "w",
-              encoding="utf-8") as fh:
-        json.dump(
-            {
-                "n_docs": stats["n_docs"],
-                "avgdl": stats["avgdl"],
-                # exact integer: lets append_bm25_index recompute avgdl
-                # as (sum_dl + delta) / (n_docs + delta) with the SAME
-                # IEEE division Spark's avg performs
-                "sum_dl": stats["sum_dl"],
-                "n_buckets": n_buckets,
-            },
-            fh,
-        )
 
 
 def bm25_query(
@@ -612,12 +601,9 @@ def bm25_query(
     the postings/df scans prune to those partitions, and the scoring
     formula is bm25_score's integer micro-quantized sum."""
     import hashlib
-    import json
     import os
 
-    with open(os.path.join(path, "_bm25_stats.json"),
-              encoding="utf-8") as fh:
-        stats = json.load(fh)
+    stats = layout.read_json(os.path.join(path, "_bm25_stats.json"))
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     nb = stats["n_buckets"]
     terms = sorted(set(terms))
@@ -695,14 +681,12 @@ def append_bm25_index(
     append with the same delta, or rebuild with write_bm25_index. On
     an object store, stage each append as a generation directory
     behind a manifest pointer swap instead."""
-    import json
     import os
 
     from .sampling import hash_bucket
 
-    with open(os.path.join(path, "_bm25_stats.json"),
-              encoding="utf-8") as fh:
-        stats = json.load(fh)
+    side = os.path.join(path, "_bm25_stats.json")
+    stats = layout.read_json(side)
     nb = stats["n_buckets"]
 
     # one tokenization for the delta stats + postings + df writes
@@ -719,19 +703,16 @@ def append_bm25_index(
         .agg(F.count("*").alias("tf"))
         .withColumn("bucket", (hash_bucket(F.col("term")) % nb))
     )
-    (
-        tf.repartition("bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
+    layout.write_partitioned(
+        tf, os.path.join(path, "postings"), "bucket", mode="append"
     )
-    (
-        tf.groupBy("term", "bucket")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .repartition("bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "df"))
+    layout.write_partitioned(
+        tf.groupBy("term", "bucket").agg(
+            F.count_distinct("doc_id").alias("df")
+        ),
+        os.path.join(path, "df"),
+        "bucket",
+        mode="append",
     )
     n_docs = stats["n_docs"] + delta["n_docs"]
     sum_dl = stats["sum_dl"] + (delta["sum_dl"] or 0)
@@ -739,9 +720,7 @@ def append_bm25_index(
         n_docs=n_docs, sum_dl=sum_dl,
         avgdl=(sum_dl / n_docs) if n_docs else None,
     )
-    with open(os.path.join(path, "_bm25_stats.json"), "w",
-              encoding="utf-8") as fh:
-        json.dump(stats, fh)
+    layout.write_json(side, stats)
 
 
 def compact_bm25_index(spark, path: str) -> None:
@@ -752,32 +731,17 @@ def compact_bm25_index(spark, path: str) -> None:
     many small files and sums many partials. Compaction rewrites each
     sub-table back to one file set per bucket and collapses the df
     partials into one row per (term, bucket); query results are
-    identical before and after (equality-tested).
-
-    The swap is local-filesystem rename (write to `<sub>.compact`,
-    rename the old dir away, rename the new one in, delete the old) —
-    on an object store use a manifest/pointer swap instead. Not
-    concurrency-safe: quiesce writers first."""
+    identical before and after (equality-tested). Swap and crash
+    recovery as in ``layout``."""
     import os
-    import shutil
 
-    for sub, re_agg in (("postings", False), ("df", True)):
-        src = os.path.join(path, sub)
-        tmp, old = src + ".compact", src + ".old"
-        df = spark.read.parquet(src)
-        if re_agg:
-            df = df.groupBy("term", "bucket").agg(
-                F.sum("df").alias("df")
-            )
-        (
-            df.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
+    layout.rewrite(spark, os.path.join(path, "postings"), "bucket")
+    layout.rewrite(
+        spark,
+        os.path.join(path, "df"),
+        "bucket",
+        lambda df: df.groupBy("term", "bucket").agg(F.sum("df").alias("df")),
+    )
 
 
 def save_lm(
@@ -795,7 +759,6 @@ def save_lm(
     vocabulary size — V must come from training time, because a pruned
     table's distinct count would silently change the smoothed
     denominators."""
-    import json
     import os
 
     if vocab_size is None:
@@ -803,20 +766,18 @@ def save_lm(
         vocab_size = unigrams.count()
     unigrams.write.mode("overwrite").parquet(os.path.join(path, "uni"))
     bigrams.write.mode("overwrite").parquet(os.path.join(path, "big"))
-    with open(os.path.join(path, "_lm_meta.json"), "w",
-              encoding="utf-8") as fh:
-        json.dump({"k": k, "vocab_size": vocab_size}, fh)
+    layout.write_json(
+        os.path.join(path, "_lm_meta.json"), {"k": k, "vocab_size": vocab_size}
+    )
 
 
 def load_lm(spark, path: str):
     """(unigrams, bigrams, meta) from a save_lm artifact — pass straight
     to lm_score / stream_lm_filter with meta['vocab_size'] and
     meta['k'] so scoring matches the training-time smoothing exactly."""
-    import json
     import os
 
-    with open(os.path.join(path, "_lm_meta.json"), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = layout.read_json(os.path.join(path, "_lm_meta.json"))
     return (
         spark.read.parquet(os.path.join(path, "uni")),
         spark.read.parquet(os.path.join(path, "big")),

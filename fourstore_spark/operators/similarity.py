@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fourstore_spark import layout
+
 
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -638,30 +640,26 @@ def write_ivf_index(
     cells' files), with the centroids in a JSON sidecar so the index is
     self-describing. One exchange on the cell key at write time buys
     nprobe/|cells| I/O on every query after."""
-    import json
     import os
 
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    (
-        assigned.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
+    layout.write_partitioned(
+        ivf_assign(corpus, centroids, id_col, vec_col), path, "ivf_cell"
     )
-    with open(os.path.join(path, "_ivf_centroids.json"), "w",
-              encoding="utf-8") as fh:
-        json.dump({"centroids": centroids}, fh)
+    layout.write_json(
+        os.path.join(path, "_ivf_centroids.json"), {"centroids": centroids}
+    )
 
 
 def read_ivf_index(spark, path: str):
     """(corpus DataFrame with ivf_cell partition column, centroids)."""
-    import json
+    return spark.read.parquet(path), _ivf_centroids(path)
+
+
+def _ivf_centroids(path: str) -> list:
     import os
 
-    with open(os.path.join(path, "_ivf_centroids.json"),
-              encoding="utf-8") as fh:
-        centroids = json.load(fh)["centroids"]
-    return spark.read.parquet(path), centroids
+    side = layout.read_json(os.path.join(path, "_ivf_centroids.json"))
+    return side["centroids"]
 
 
 def ivf_probe_indexed(
@@ -726,18 +724,11 @@ def append_ivf_index(
 
     Caller contract mirrors append_bm25_index: appended ids must be
     new; one writer at a time."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ivf_centroids.json"),
-              encoding="utf-8") as fh:
-        centroids = json.load(fh)["centroids"]
-    (
-        ivf_assign(corpus, centroids, id_col, vec_col)
-        .repartition("ivf_cell")
-        .write.mode("append")
-        .partitionBy("ivf_cell")
-        .parquet(path)
+    layout.write_partitioned(
+        ivf_assign(corpus, _ivf_centroids(path), id_col, vec_col),
+        path,
+        "ivf_cell",
+        mode="append",
     )
 
 
@@ -748,28 +739,6 @@ def compact_ivf_index(spark, path: str) -> None:
     many appends a probe opens many small files per pruned cell.
     Compaction rewrites the corpus back to one file set per cell —
     same rows, same cell labels, same sidecar centroids; probe results
-    are identical before and after (equality-tested).
-
-    The swap is local-filesystem rename (write to ``<path>.compact``,
-    carry the centroid sidecar over, rename the old dir away, rename
-    the new one in, delete the old) — on an object store use a
-    manifest/pointer swap instead. Not concurrency-safe: quiesce
-    writers first."""
-    import os
-    import shutil
-
-    tmp, old = path + ".compact", path + ".old"
-    (
-        spark.read.parquet(path)
-        .repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(tmp)
-    )
-    shutil.copy(
-        os.path.join(path, "_ivf_centroids.json"),
-        os.path.join(tmp, "_ivf_centroids.json"),
-    )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    are identical before and after (equality-tested). Swap and crash
+    recovery as in ``layout``."""
+    layout.rewrite(spark, path, "ivf_cell")

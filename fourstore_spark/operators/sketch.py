@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fourstore_spark import layout
+
 from .sampling import _MOD, hash_bucket
 
 # depth*width cells may be collected/broadcast — same guard class as
@@ -360,22 +362,20 @@ def kmv_save(sketch: DataFrame, path: str, *, k: int = 1024) -> None:
     save_classifier/save_lm shape): estimating or merging under a
     different k than the build silently biases the estimator, and the
     row count alone cannot reveal the build k once a sketch saturates."""
-    import json
     import os
 
     sketch.write.mode("overwrite").parquet(os.path.join(path, "sketch"))
-    with open(os.path.join(path, "_kmv.json"), "w", encoding="utf-8") as fh:
-        json.dump({"k": int(k), "hash": "md5-prefix-48bit"}, fh)
+    layout.write_json(
+        os.path.join(path, "_kmv.json"), {"k": int(k), "hash": "md5-prefix-48bit"}
+    )
 
 
 def kmv_load(spark, path: str) -> tuple[DataFrame, int]:
     """-> (sketch DataFrame, build k). Feed the returned k to
     kmv_estimate/kmv_merge — never a default."""
-    import json
     import os
 
-    with open(os.path.join(path, "_kmv.json"), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = layout.read_json(os.path.join(path, "_kmv.json"))
     return spark.read.parquet(os.path.join(path, "sketch")), int(meta["k"])
 
 

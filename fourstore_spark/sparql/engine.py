@@ -173,7 +173,7 @@ class SparqlResult:
         exprs = []
         for var in self.df.columns:
             t = types.get(var, "lex")
-            q = f"`{var}`"
+            q = "`" + var.replace("`", "``") + "`"
             if t == "lex":
                 e = f"{q}.lex"
             elif t == "num":

@@ -13,20 +13,20 @@ access paths that dominate SPARQL plans:
   are hash-bucketed by ``s`` into evenly-sized files (per-predicate
   bucket counts proportional to row share, so hot rdf:type-style
   predicates spread instead of forming one giant partition).
-  ``write_bucketed`` additionally records bucketing in the metastore so
-  s-joins between two bucketed tables skip the shuffle entirely.
 
 A manifest records counts + layout for dump/restore parity
-(src/frontend/dump.c, restore.c)."""
+(src/frontend/dump.c, restore.c). Manifest writes and directory swaps
+go through ``layout``."""
 
 from __future__ import annotations
 
-import json
 import os
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fourstore_spark import layout
 
 MANIFEST = "_fourstore_manifest.json"
 
@@ -75,41 +75,13 @@ def write_store(
     buckets = {
         p: max(1, round(n * partitions / total)) for p, n in counts.items()
     }
-    if buckets:
-        bucket_of = F.element_at(
-            F.create_map(
-                *[x for p, b in buckets.items() for x in (F.lit(p), F.lit(b))]
-            ),
-            F.col("p"),
-        )
-        shuffled = quads.repartition(
-            max(2 * partitions, 2 * sum(buckets.values())),
-            F.col("p"),
-            F.pmod(F.xxhash64(F.col("s")), bucket_of),
-        )
-    else:  # empty store
-        shuffled = quads.repartition(1)
-    (
-        # sortWithinPartitions(p, s): the writer sees output already
-        # sorted by its partition column so it keeps row order — each
-        # per-predicate file stays s-sorted for row-group min/max pruning
-        # on subject-constant patterns. The parquet bloom filter on s
-        # adds sub-row-group pruning for subject POINT lookups (the
-        # hash(s) bucketing narrows them to one file; min/max stats then
-        # bound the row groups; the bloom filter rejects the false
-        # positives min/max can't — ptree-lookup parity for the
-        # dominant `<s> ?p ?o` access path)
-        shuffled.sortWithinPartitions("p", "s")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#s", "true")
-        # size the filter to the real per-file subject count — the
-        # default expects 1M NDV and writes ~1 MB per file regardless
-        .option(
-            "parquet.bloom.filter.expected.ndv#s",
-            str(max(1024, int(total) // max(1, sum(buckets.values())))),
-        )
-        .partitionBy("p")
-        .parquet(path)
+    _write_quads(
+        quads,
+        path,
+        "overwrite",
+        buckets,
+        max(2 * partitions, 2 * sum(buckets.values())),
+        int(total) // max(1, sum(buckets.values())),
     )
     quads.unpersist()
     if counts:
@@ -159,9 +131,55 @@ def write_store(
         # predicate -> physical column name in _subjects
         "pred_columns": pred_columns,
     }
-    with open(os.path.join(path, MANIFEST), "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
+    layout.write_json(os.path.join(path, MANIFEST), manifest)
     return manifest
+
+
+def _write_quads(
+    quads: DataFrame,
+    path: str,
+    mode: str,
+    buckets: dict,
+    tasks: int | None,
+    rows_per_file: int,
+) -> None:
+    """The quad layout's one write: rows of predicate ``p`` hash(s)-
+    bucketed into ``buckets[p]`` files inside directory ``p=...``.
+    ``tasks`` is the shuffle width (None: Spark's default, coalescable),
+    ``rows_per_file`` sizes each file's bloom filter."""
+    if buckets:
+        bucket_of = F.element_at(
+            F.create_map(
+                *[x for p, b in buckets.items() for x in (F.lit(p), F.lit(b))]
+            ),
+            F.col("p"),
+        )
+        keys = (F.col("p"), F.pmod(F.xxhash64(F.col("s")), bucket_of))
+        quads = quads.repartition(*((tasks,) if tasks else ()), *keys)
+    else:  # empty store
+        quads = quads.repartition(1)
+    (
+        # sortWithinPartitions(p, s): the writer sees output already
+        # sorted by its partition column so it keeps row order — each
+        # per-predicate file stays s-sorted for row-group min/max pruning
+        # on subject-constant patterns. The parquet bloom filter on s
+        # adds sub-row-group pruning for subject POINT lookups (the
+        # hash(s) bucketing narrows them to one file; min/max stats then
+        # bound the row groups; the bloom filter rejects the false
+        # positives min/max can't — ptree-lookup parity for the
+        # dominant `<s> ?p ?o` access path)
+        quads.sortWithinPartitions("p", "s")
+        .write.mode(mode)
+        .option("parquet.bloom.filter.enabled#s", "true")
+        # size the filter to the real per-file subject count — the
+        # default expects 1M NDV and writes ~1 MB per file regardless
+        .option(
+            "parquet.bloom.filter.expected.ndv#s",
+            str(max(1024, rows_per_file)),
+        )
+        .partitionBy("p")
+        .parquet(path)
+    )
 
 
 def _stats_pass(quads: DataFrame) -> list:
@@ -319,17 +337,13 @@ def append_quads(
     new = d.join(s, cond, "left_anti").persist()
     n_new = new.count()
     if n_new:
-        (
-            new.repartition(F.col("p"), F.pmod(F.xxhash64(F.col("s")), F.lit(partitions)))
-            .sortWithinPartitions("p", "s")
-            .write.mode("append")
-            .option("parquet.bloom.filter.enabled#s", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#s",
-                str(max(1024, n_new // partitions)),
-            )
-            .partitionBy("p")
-            .parquet(path)
+        _write_quads(
+            new,
+            path,
+            "append",
+            {p: partitions for p in preds},
+            None,
+            n_new // partitions,
         )
         manifest["rows"] = int(manifest.get("rows") or 0) + n_new
         # refresh per-predicate stats for the touched predicates only
@@ -353,8 +367,7 @@ def append_quads(
     new.unpersist()
     if rebuild_subjects and manifest.get("subjects_stale"):
         _rebuild_subjects(spark, path, manifest, partitions)
-    with open(os.path.join(path, MANIFEST), "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
+    layout.write_json(os.path.join(path, MANIFEST), manifest)
     return manifest
 
 
@@ -420,12 +433,12 @@ def compact_store(
     shares: a directory whose file count exceeds its bucket target
     (same formula as write_store) is rewritten. Only fragmented
     directories are read or written — one pruned read, one bucketed
-    sorted write into a hidden staging dir, then an atomic per-directory
-    swap, so untouched predicates (the bulk of a 100 TB store) move zero
-    bytes. Pass ``predicates`` to force-compact a specific set.
+    sorted write into a hidden staging dir, then ``layout``'s crash-safe
+    per-directory swap, so untouched predicates (the bulk of a 100 TB
+    store) move zero bytes. Pass ``predicates`` to force-compact a
+    specific set.
     """
-    import shutil
-
+    layout.recover(path)
     manifest = read_manifest(path)
     if not manifest:
         raise ValueError(f"no store manifest at {path}")
@@ -447,76 +460,27 @@ def compact_store(
         touched = [p for p in predicates if p in dirs]
     compacted = {}
     if touched:
-        bucket_of = F.element_at(
-            F.create_map(
-                *[
-                    x
-                    for p in touched
-                    for x in (F.lit(p), F.lit(targets.get(p, partitions)))
-                ]
-            ),
-            F.col("p"),
-        )
-        slice_df = spark.read.parquet(path).where(F.col("p").isin(touched))
+        buckets = {p: targets.get(p, partitions) for p in touched}
+        before = {p: _parquet_file_count(dirs[p]) for p in touched}
+        # staged inside the store, so every swap renames within one
+        # filesystem
         tmp = os.path.join(path, "_compact_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            slice_df.repartition(
-                max(2, 2 * sum(targets.get(p, partitions) for p in touched)),
-                F.col("p"),
-                F.pmod(F.xxhash64(F.col("s")), bucket_of),
-            )
-            .sortWithinPartitions("p", "s")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#s", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#s",
-                str(
-                    max(
-                        1024,
-                        sum(pred_stats.get(p, (0, 0))[0] for p in touched)
-                        // max(
-                            1,
-                            sum(targets.get(p, partitions) for p in touched),
-                        ),
-                    )
-                ),
-            )
-            .partitionBy("p")
-            .parquet(tmp)
+        _write_quads(
+            spark.read.parquet(path).where(F.col("p").isin(touched)),
+            tmp,
+            "overwrite",
+            buckets,
+            max(2, 2 * sum(buckets.values())),
+            sum(pred_stats.get(p, (0, 0))[0] for p in touched)
+            // max(1, sum(buckets.values())),
         )
-        # crash-safe per-directory swap (ADVICE r4): rename the live dir
-        # ASIDE first, then rename the compacted dir IN, then delete the
-        # old one — a crash between any two steps leaves either the live
-        # or the aside copy intact and recoverable (never rmtree before
-        # the replacement is in place; both renames are same-filesystem
-        # since the staging dir lives inside the store). Single-writer
-        # discipline (as everywhere in this store) is assumed.
-        for name in os.listdir(tmp):
-            if not name.startswith("p="):
-                continue
-            live = os.path.join(path, name)
-            # "_"-prefixed so Spark's partition discovery and
-            # pred_dir_map both ignore a crash-leftover aside dir; "="
-            # must not appear in the name (Spark's hidden-path filter
-            # exempts "_..=.." as a potential partition value)
-            aside = os.path.join(path, "_old_" + name.replace("=", "~"))
-            before = _parquet_file_count(live)
-            shutil.rmtree(aside, ignore_errors=True)  # stale crash leftover
-            if os.path.exists(live):
-                os.rename(live, aside)
-            os.rename(os.path.join(tmp, name), live)
-            shutil.rmtree(aside, ignore_errors=True)
-            compacted[urllib.parse.unquote(name[2:])] = [
-                before,
-                _parquet_file_count(live),
-            ]
-        shutil.rmtree(tmp, ignore_errors=True)
+        for name in layout.replace_partitions(path, tmp):
+            p = urllib.parse.unquote(name[2:])
+            compacted[p] = [before[p], _parquet_file_count(dirs[p])]
     if rebuild_subjects and manifest.get("subjects_stale"):
         _rebuild_subjects(spark, path, manifest, partitions)
     manifest["last_compaction"] = {p: c for p, c in sorted(compacted.items())}
-    with open(os.path.join(path, MANIFEST), "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
+    layout.write_json(os.path.join(path, MANIFEST), manifest)
     return manifest
 
 
@@ -543,27 +507,5 @@ def read_manifest(path: str) -> dict | None:
     p = os.path.join(path, MANIFEST)
     if not os.path.exists(p):
         return None
-    with open(p, encoding="utf-8") as fh:
-        return json.load(fh)
+    return layout.read_json(p)
 
-
-def write_bucketed(
-    quads: DataFrame, table: str, buckets: int = 32
-) -> None:
-    """Metastore-backed bucketed layout: two tables bucketed by ``s`` with
-    the same bucket count co-locate, so s-joins are shuffle-free."""
-    (
-        quads.write.mode("overwrite")
-        .bucketBy(buckets, "s")
-        .sortBy("p", "s")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-# (an ANALYZE TABLE helper lived here through r7 but was never wired:
-# write_store's _stats_pass computes richer per-predicate statistics —
-# row counts, exact distinct subjects, (p,s) fan-out — directly into
-# the manifest, which is the fs_bind_freq/optimiser.c:445-524
-# grounding the planner actually reads; catalog-table ANALYZE had no
-# caller and was dropped per the r7 verdict)

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from fourstore_spark import layout
 from fourstore_spark.model import DEFAULT_GRAPH, QUADS_SCHEMA
 
 _QUAD_STRUCT_DDL = (
@@ -876,15 +877,7 @@ def stream_sketch_ingest(
     successful batch (the kmv_save discipline — a sketch's params are
     part of its meaning); later batches and readers validate against
     it."""
-    import json
     import os
-
-    from fourstore_spark.operators.lm import lm_tokens
-    from fourstore_spark.operators.sketch import (
-        cms_build,
-        hll_build,
-        qsketch_build,
-    )
 
     params = {
         "cms_width": int(cms_width), "cms_depth": int(cms_depth),
@@ -897,8 +890,7 @@ def stream_sketch_ingest(
         if batch_df.isEmpty():
             return
         if os.path.isfile(side):
-            with open(side, encoding="utf-8") as fh:
-                stored = json.load(fh)
+            stored = layout.read_json(side)
             if stored != params:
                 raise ValueError(
                     f"sketch store {store_path} was built with {stored}, "
@@ -906,22 +898,9 @@ def stream_sketch_ingest(
                     "params do not merge — start a new store or match them"
                 )
         batch = batch_df.localCheckpoint()  # consumed by 2-3 builds
-        toks = batch.select(
-            F.explode(lm_tokens(F.col(text_col))).alias("tok")
-        )
-        cms_build(toks, "tok", width=cms_width, depth=cms_depth).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/cms/batch={batch_id}")
-        hll_build(toks, "tok", m=hll_m).write.mode("overwrite").parquet(
-            f"{store_path}/hll/batch={batch_id}"
-        )
-        if value_col is not None:
-            qsketch_build(batch, value_col, sub_bits=sub_bits).write.mode(
-                "overwrite"
-            ).parquet(f"{store_path}/qsketch/batch={batch_id}")
+        _write_sketches(batch, text_col, params, store_path, batch_id)
         if not os.path.isfile(side):  # written LAST: crashed first
-            with open(side, "w", encoding="utf-8") as fh:  # batch redoes
-                json.dump(params, fh)
+            layout.write_json(side, params)  # batch redoes
 
     writer = (
         docs_stream.writeStream.foreachBatch(_sink)
@@ -943,12 +922,9 @@ def read_sketch_store(
     hll_estimate / qsketch_quantile — never defaults (the sidecar
     exists so a store built at non-default params cannot be silently
     misread)."""
-    import json
     import os
 
-    side = os.path.join(store_path, "_sketches.json")
-    with open(side, encoding="utf-8") as fh:
-        params = json.load(fh)
+    params = layout.read_json(os.path.join(store_path, "_sketches.json"))
     out: dict[str, DataFrame] = {}
     aggs = {
         "cms": (["r", "c"], F.sum),
@@ -971,22 +947,17 @@ def read_sketch_store(
 def compact_sketch_store(spark, store_path: str) -> None:
     """Collapse all batch directories of each sketch kind into one
     ``batch=0`` file set — the readout is identical before and after
-    (merge is associative), only the file count changes. The
-    compact_lsh_index local-rename swap: quiesce the writer first."""
+    (merge is associative), only the file count changes. Swap and crash
+    recovery as in ``layout``: quiesce the writer first."""
     import os
 
+    layout.recover(store_path)
     merged, _ = read_sketch_store(spark, store_path)
     for kind, df in merged.items():
         src = os.path.join(store_path, kind)
-        tmp, old = src + ".compact", src + ".old"
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "batch=0")
-        )
-        os.rename(src, old)
-        os.rename(tmp, src)
-        import shutil
-
-        shutil.rmtree(old)
+        staged = layout.staging(src)
+        layout.write_partition(df.coalesce(1), staged, "batch", 0)
+        layout.replace(src, staged)
 
 
 def init_sketch_store(
@@ -1011,15 +982,7 @@ def init_sketch_store(
     pinned in tests/test_streaming.py). Refuses an already-initialized
     store (re-bootstrapping would double-count the corpus — the same
     additive-counter hazard the stream's batch-keyed dirs solve)."""
-    import json
     import os
-
-    from fourstore_spark.operators.lm import lm_tokens
-    from fourstore_spark.operators.sketch import (
-        cms_build,
-        hll_build,
-        qsketch_build,
-    )
 
     side = os.path.join(store_path, "_sketches.json")
     if os.path.isfile(side):
@@ -1033,16 +996,34 @@ def init_sketch_store(
         "hll_m": int(hll_m), "sub_bits": int(sub_bits),
         "value_col": value_col,
     }
-    toks = docs.select(F.explode(lm_tokens(F.col(text_col))).alias("tok"))
-    cms_build(toks, "tok", width=cms_width, depth=cms_depth).write.mode(
-        "overwrite"
-    ).parquet(f"{store_path}/cms/batch=base")
-    hll_build(toks, "tok", m=hll_m).write.mode("overwrite").parquet(
-        f"{store_path}/hll/batch=base"
+    _write_sketches(docs, text_col, params, store_path, "base")
+    layout.write_json(side, params)
+
+
+def _write_sketches(
+    docs: DataFrame, text_col: str, params: dict, store_path: str, batch_id
+) -> None:
+    """One batch's sketches into ``<store_path>/<kind>/batch=<batch_id>``."""
+    from fourstore_spark.operators.lm import lm_tokens
+    from fourstore_spark.operators.sketch import (
+        cms_build,
+        hll_build,
+        qsketch_build,
     )
-    if value_col is not None:
-        qsketch_build(docs, value_col, sub_bits=sub_bits).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/qsketch/batch=base")
-    with open(side, "w", encoding="utf-8") as fh:
-        json.dump(params, fh)
+
+    p = params
+    toks = docs.select(F.explode(lm_tokens(F.col(text_col))).alias("tok"))
+    sketches = {
+        "cms": cms_build(
+            toks, "tok", width=p["cms_width"], depth=p["cms_depth"]
+        ),
+        "hll": hll_build(toks, "tok", m=p["hll_m"]),
+    }
+    if p["value_col"] is not None:
+        sketches["qsketch"] = qsketch_build(
+            docs, p["value_col"], sub_bits=p["sub_bits"]
+        )
+    for kind, sketch in sketches.items():
+        layout.write_partition(
+            sketch, f"{store_path}/{kind}", "batch", batch_id
+        )

@@ -176,3 +176,40 @@ def test_cli_transaction_atomic(spark, tmp_path, capsys):
     assert main(["transaction", store, str(good)]) == 0
     assert main(["dump", store, str(out)]) == 0
     assert "added" in _read_dump(str(out))
+
+
+def test_cli_store_swap_survives_failed_rename_in(
+    spark, tmp_path, monkeypatch
+):
+    import os
+
+    import pytest
+
+    store = str(tmp_path / "swapstore")
+    nt = tmp_path / "s.nq"
+    nt.write_text('<urn:a> <urn:p> "old" .\n')
+    assert main(["restore", store, str(nt)]) == 0
+
+    real = os.rename
+    failed = []
+
+    def rename(src, dst):
+        if dst == store and not failed:  # the new store's rename-in
+            failed.append(src)
+            raise OSError("injected rename-in failure")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    insert = 'INSERT DATA { <urn:b> <urn:p> "new" }'
+    with pytest.raises(OSError, match="injected"):
+        main(["update", store, insert])
+    assert failed
+    out = tmp_path / "out.nq"
+    assert main(["dump", store, str(out)]) == 0
+    dumped = _read_dump(str(out))
+    assert "old" in dumped and "new" not in dumped
+
+    assert main(["update", store, insert]) == 0
+    assert main(["dump", store, str(out)]) == 0
+    dumped = _read_dump(str(out))
+    assert "old" in dumped and "new" in dumped

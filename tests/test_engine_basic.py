@@ -327,3 +327,14 @@ def test_iri_base_resolution_rfc3986_targets(engine):
     assert r["frag"] == "http://ex.org/dir/page?old#f2"
     assert r["self"] == "http://ex.org/dir/page?old"
     assert r["rel"] == "http://ex.org/dir/rel"
+
+
+def test_flat_escapes_backticks_in_column_names(spark):
+    from fourstore_spark.sparql.engine import SparqlResult
+
+    df = spark.createDataFrame(
+        [(("a", 1.5),)], "`we``ird` struct<lex:string,num:double>"
+    )
+    assert df.columns == ["we`ird"]
+    rows = SparqlResult("SELECT", df).flat(**{"we`ird": "num"}).collect()
+    assert rows[0].asDict() == {"we`ird": 1.5}
