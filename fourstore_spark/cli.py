@@ -216,29 +216,16 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "rid":
         # 4s-rid (src/utilities/4s-rid.c): prints the RID a term hashes
-        # to; here the engine's 64-bit term key (translator.term_rid)
-        from pyspark.sql import functions as F
-
-        from fourstore_spark.model import KIND_BNODE, KIND_LITERAL, KIND_URI
-        from fourstore_spark.sources.rdfio import _TERM_RE, _unescape
+        # to; here the engine's 64-bit term key (model.term_rid)
+        from fourstore_spark.model import const_term_col, term_rid
+        from fourstore_spark.sources.rdfio import _TERM_RE, _nt_term
 
         m = _TERM_RE.match(args.term)
         if not m or m.group("dot") is not None:
             print(f"unparsable term: {args.term!r}", file=sys.stderr)
             return 1
-        if m.group("iri") is not None:
-            kind, lex, dt, lang = KIND_URI, _unescape(m.group("iri")), None, None
-        elif m.group("bnode") is not None:
-            kind, lex, dt, lang = KIND_BNODE, m.group("bnode"), None, None
-        else:
-            kind, lex = KIND_LITERAL, _unescape(m.group("lit"))
-            dt = m.group("dt")
-            lang = m.group("lang").lower() if m.group("lang") else None
-        row = spark.range(1).select(
-            F.xxhash64(
-                F.lit(kind).cast("tinyint"), F.lit(lex), F.lit(dt), F.lit(lang)
-            ).alias("rid")
-        ).head()
+        term = const_term_col(_nt_term(m))
+        row = spark.range(1).select(term_rid(term).alias("rid")).head()
         print(row["rid"])
         return 0
 
@@ -251,33 +238,19 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
-        from fourstore_spark.model import KIND_BNODE, KIND_URI
+        from fourstore_spark.model import KIND_BNODE, KIND_URI, quad_term, term_rid
         from fourstore_spark.store import read_store
 
         q = read_store(spark, args.store)
-        n = F.lit(None).cast("string")
 
-        def part(kind, lex, dt, lang):
+        def part(slot):
+            t = quad_term(slot)
             return q.select(
-                F.xxhash64(kind.cast("tinyint"), lex, dt, lang).alias("rid"),
-                kind.cast("tinyint").alias("kind"),
-                lex.alias("lex"),
-                dt.alias("dt"),
-                lang.alias("lang"),
+                term_rid(t).alias("rid"),
+                *(t[f].alias(f) for f in ("kind", "lex", "dt", "lang")),
             )
 
-        allt = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                part(F.col("s_kind"), F.col("s"), n, n),
-                part(F.lit(KIND_URI), F.col("p"), n, n),
-                part(F.lit(KIND_URI), F.col("g"), n, n),
-                part(
-                    F.col("o_kind"), F.col("o_lex"), F.col("o_dt"),
-                    F.col("o_lang"),
-                ),
-            ],
-        )
+        allt = reduce(lambda a, b: a.unionByName(b), map(part, "spgo"))
         hits = (
             allt.where(F.col("rid").isin(args.rids))
             .dropDuplicates(["rid", "kind", "lex", "dt", "lang"])

@@ -438,24 +438,27 @@ def dmetaphone_udf():
             # and no second per-occurrence hash pass (Series.map(dict)
             # re-hashes every occurrence; codes.take does not). Nulls
             # factorize to the -1 sentinel, which take() wraps to the
-            # trailing [] slot — same ''/None -> [] contract as before.
+            # trailing () slot — same ''/None -> [] contract as before.
+            # Values are tuples: every occurrence of a token shares one
+            # memoized object, so it must be immutable (Arrow converts a
+            # tuple to array<string> like a list).
             memo = _DMETA_MEMO
             codes, uniques = pd.factorize(tokens, use_na_sentinel=True)
             vals = np.empty(len(uniques) + 1, dtype=object)
             for j, t in enumerate(uniques):
                 if not t:
-                    vals[j] = []
+                    vals[j] = ()
                     continue
                 try:
                     vals[j] = memo[t]
                 except KeyError:
                     p, a = _dmeta(t)
-                    v = [k for k in (p, a) if k]
+                    v = tuple(k for k in (p, a) if k)
                     if len(memo) >= _MEMO_CAP:
                         memo.clear()
                     memo[t] = v
                     vals[j] = v
-            vals[len(uniques)] = []
+            vals[len(uniques)] = ()
             return pd.Series(vals.take(codes), index=tokens.index)
 
         _UDF_CACHE["dmeta"] = _dm

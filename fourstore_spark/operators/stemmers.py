@@ -25,18 +25,6 @@ _DE_ST_END = "bdfghklmnt"
 
 def _r_regions(word: str, vowels: str) -> tuple[int, int]:
     """Standard Snowball R1/R2 start offsets."""
-
-    def _after_vc(start: int) -> int:
-        i = start
-        n = len(word)
-        while i < n and word[i] not in vowels:
-            i += 1
-        while i < n and word[i] in vowels:
-            i += 1
-        # i now at first non-vowel after a vowel... need vowel-then-
-        # non-vowel: walk again properly
-        return i
-
     n = len(word)
     r1 = n
     for i in range(n - 1):

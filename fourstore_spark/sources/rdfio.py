@@ -37,9 +37,12 @@ from fourstore_spark.model import (
     KIND_BNODE,
     KIND_LITERAL,
     KIND_URI,
-    NUMERIC_DATATYPES,
     QUADS_SCHEMA,
+    bnode_row,
+    iri_row,
+    term_row,
 )
+from fourstore_spark.sparql import algebra as A
 
 _TERM_RE = re.compile(
     r"""\s*(?:
@@ -84,6 +87,30 @@ def _unescape(s: str) -> str:
     return "".join(out)
 
 
+def _nt_term(m: re.Match) -> tuple:
+    """Term row of one N-Triples term match (not the final dot)."""
+    if m.group("iri") is not None:
+        return iri_row(_unescape(m.group("iri")))
+    if m.group("bnode") is not None:
+        return bnode_row(m.group("bnode"))
+    return term_row((_unescape(m.group("lit")), m.group("dt"), m.group("lang")))
+
+
+def _quad(g: str, s: tuple, p: str, o: tuple) -> tuple:
+    """QUADS_SCHEMA row from subject and object term rows."""
+    if s[0] == KIND_LITERAL:
+        raise ValueError(f"literal subject: {s[1]!r}")
+    return (g, s[1], s[0], p) + o
+
+
+def _triple_rows(triples: list, graph: str) -> list:
+    """QUADS_SCHEMA rows of algebra triples in one graph."""
+    return [
+        _quad(graph, term_row(tp.s), tp.p.value, term_row(tp.o))
+        for tp in triples
+    ]
+
+
 def parse_nt_line(line: str, default_graph: str = DEFAULT_GRAPH):
     """One N-Triples/N-Quads line -> quad tuple matching QUADS_SCHEMA,
     or None for blank/comment lines."""
@@ -99,40 +126,18 @@ def parse_nt_line(line: str, default_graph: str = DEFAULT_GRAPH):
         pos = m.end()
         if m.group("dot") is not None:
             break
-        if m.group("iri") is not None:
-            terms.append(("iri", _unescape(m.group("iri")), None, None))
-        elif m.group("bnode") is not None:
-            terms.append(("bnode", m.group("bnode")[2:], None, None))
-        else:
-            terms.append(
-                ("lit", _unescape(m.group("lit")), m.group("dt"), m.group("lang"))
-            )
+        terms.append(_nt_term(m))
     if len(terms) not in (3, 4):
         raise ValueError(f"expected 3 or 4 terms: {line!r}")
-    (sk, sv, _, _), (pk, pv, _, _), (ok, ov, odt, olang) = terms[:3]
-    if pk != "iri":
+    s, p, o = terms[:3]
+    if p[0] != KIND_URI:
         raise ValueError(f"predicate must be an IRI: {line!r}")
+    g = default_graph
     if len(terms) == 4:
-        gk, gv, _, _ = terms[3]
-        g = gv if gk == "iri" else "_:" + gv
-    else:
-        g = default_graph
-    s = sv if sk == "iri" else "_:" + sv
-    s_kind = KIND_URI if sk == "iri" else KIND_BNODE
-    if ok == "iri":
-        o_kind, o_lex, o_dt, o_lang, o_num = KIND_URI, ov, None, None, None
-    elif ok == "bnode":
-        o_kind, o_lex, o_dt, o_lang, o_num = KIND_BNODE, "_:" + ov, None, None, None
-    else:
-        o_kind, o_lex, o_dt = KIND_LITERAL, ov, odt
-        o_lang = olang.lower() if olang else None
-        o_num = None
-        if odt in NUMERIC_DATATYPES:
-            try:
-                o_num = float(ov)
-            except ValueError:
-                o_num = None
-    return (g, s, s_kind, pv, o_kind, o_lex, o_dt, o_lang, o_num)
+        if terms[3][0] == KIND_LITERAL:
+            raise ValueError(f"literal graph: {line!r}")
+        g = terms[3][1]
+    return _quad(g, s, p[1], o)
 
 
 _LOAD_SEQ = __import__("itertools").count(1)
@@ -305,35 +310,15 @@ def quads_from_turtle(
     ``base`` resolves relative IRIs when the document carries no @base
     of its own — the HTTP import path passes the graph URI, matching the
     reference where raptor parses against the model URI (import.c)."""
-    from fourstore_spark.sparql import algebra as A
-
     if base and not _AT_BASE.search(text) and not re.search(
         r"(?im)^\s*BASE\b", text
     ):
         text = f"@base <{base}> .\n" + text
-    rows = []
-    for tp in parse_turtle(text):
-        if isinstance(tp.s, A.Iri):
-            s, s_kind = tp.s.value, KIND_URI
-        else:  # BNode
-            s, s_kind = "_:" + tp.s.label, KIND_BNODE
-        pv = tp.p.value
-        o = tp.o
-        if isinstance(o, A.Iri):
-            row_o = (KIND_URI, o.value, None, None, None)
-        elif isinstance(o, A.BNode):
-            row_o = (KIND_BNODE, "_:" + o.label, None, None, None)
-        else:
-            num = None
-            if o.dt in NUMERIC_DATATYPES:
-                try:
-                    num = float(o.lex)
-                except ValueError:
-                    num = None
-            row_o = (KIND_LITERAL, o.lex, o.dt, o.lang, num)
-        rows.append((default_graph, s, s_kind, pv) + row_o)
     return _bnode_namespace(
-        spark.createDataFrame(rows, QUADS_SCHEMA), namespace_bnodes
+        spark.createDataFrame(
+            _triple_rows(parse_turtle(text), default_graph), QUADS_SCHEMA
+        ),
+        namespace_bnodes,
     )
 
 
@@ -482,26 +467,23 @@ def quads_from_rdfxml(
     base: str = "",
     namespace_bnodes: bool = True,
 ) -> DataFrame:
-    rows = []
-    for (sk, sv), (_, pv), o in parse_rdfxml(text, base):
-        s_kind = KIND_URI if sk == "uri" else KIND_BNODE
-        if o[0] == "uri":
-            orow = (KIND_URI, o[1], None, None, None)
-        elif o[0] == "bnode":
-            orow = (KIND_BNODE, o[1], None, None, None)
-        else:
-            _, lex, dt, lang = o
-            num = None
-            if dt in NUMERIC_DATATYPES:
-                try:
-                    num = float(lex)
-                except ValueError:
-                    num = None
-            orow = (KIND_LITERAL, lex, dt, lang.lower() if lang else None, num)
-        rows.append((default_graph, sv, s_kind, pv) + orow)
+    rows = [
+        _quad(default_graph, _tagged_row(s), p[1], _tagged_row(o))
+        for s, p, o in parse_rdfxml(text, base)
+    ]
     return _bnode_namespace(
         spark.createDataFrame(rows, QUADS_SCHEMA), namespace_bnodes
     )
+
+
+def _tagged_row(t: tuple) -> tuple:
+    """Term row of a ``parse_rdfxml`` / TriX term tuple:
+    ('uri'|'bnode', value) or ('lit', lex, dt, lang)."""
+    if t[0] == "uri":
+        return iri_row(t[1])
+    if t[0] == "bnode":
+        return bnode_row(t[1])
+    return term_row(t[1:])
 
 
 # ---------------------------------------------------------------- trig
@@ -518,13 +500,13 @@ def quads_from_trig(
     text = _AT_PREFIX.sub(lambda m: f"PREFIX {m.group(1)} {m.group(2)}", text)
     text = _AT_BASE.sub(lambda m: f"BASE {m.group(1)}", text)
     p = Parser(text)
-    out = None
+    rows: list = []
 
-    def block_df(graph: str):
-        nonlocal out
-        block = p.parse_triples_block()
-        df = _triples_to_quads(spark, block, graph)
-        out = df if out is None else out.unionByName(df)
+    def block(graph: str):
+        p.expect_op("{")
+        rows.extend(_triple_rows(p.parse_triples_block(), graph))
+        p.expect_op("}")
+        p.take_op(".")
 
     while True:
         p.parse_prologue()
@@ -533,17 +515,9 @@ def quads_from_trig(
             break
         if t.type == "IDENT" and t.value.upper() == "GRAPH":
             p.next()
-            g = p.parse_iri().value
-            p.expect_op("{")
-            block_df(g)
-            p.expect_op("}")
-            p.take_op(".")
+            block(p.parse_iri().value)
         elif t.type in ("IRIREF", "PNAME") and p.peek(1).type == "OP" and p.peek(1).value == "{":
-            g = p.parse_iri().value
-            p.expect_op("{")
-            block_df(g)
-            p.expect_op("}")
-            p.take_op(".")
+            block(p.parse_iri().value)
         else:
             # one default-graph statement at a time (a full triples-block
             # parse would run into the next graph label)
@@ -551,12 +525,11 @@ def quads_from_trig(
             subj = p.parse_graph_node(triples)
             p.parse_property_list(subj, triples)
             p.take_op(".")
-            df = _triples_to_quads(spark, triples, default_graph)
-            out = df if out is None else out.unionByName(df)
-    if out is None:
-        return spark.createDataFrame([], QUADS_SCHEMA)
+            rows.extend(_triple_rows(triples, default_graph))
     # one namespace tag for the whole document: bnodes are document-scoped
-    return _bnode_namespace(out, namespace_bnodes)
+    return _bnode_namespace(
+        spark.createDataFrame(rows, QUADS_SCHEMA), namespace_bnodes
+    )
 
 
 # ---------------------------------------------------------------- trix
@@ -595,20 +568,20 @@ def quads_from_trix(
         raise ValueError("Not a TriX document")  # restore-trix.c:185
 
     def term(el):
-        """-> ('uri'|'bnode', value) | ('lit', lex, dt, lang) | None."""
+        """-> algebra Iri | BNode | Literal, or None."""
         t, txt = local(el.tag), el.text or ""
         if t == "uri":
-            return ("uri", txt.strip())
+            return A.Iri(txt.strip())
         if t == "id":
-            return ("bnode", "_:" + txt.strip())
+            return A.BNode(txt.strip())
         if t == "plainLiteral":
             lang = el.get(f"{{{_XML_NS}}}lang") or el.get("xml:lang")
-            return ("lit", txt, None, lang)
+            return A.Literal(txt, None, lang)
         if t == "typedLiteral":
             dt = el.get("datatype")
             if not dt:
                 _LOG.warning("missing datatype on typed literal")
-            return ("lit", txt, dt or None, None)
+            return A.Literal(txt, dt or None)
         _LOG.warning("unexpected TriX term <%s>", t)
         return None
 
@@ -631,30 +604,13 @@ def quads_from_trix(
                 _LOG.warning("missing part of triple")  # restore-trix.c:336
                 continue
             s, p, o = terms
-            if s[0] == "lit":
+            if isinstance(s, A.Literal):
                 _LOG.warning("literal subject not representable; skipped")
                 continue
-            if p[0] != "uri":
+            if not isinstance(p, A.Iri):
                 _LOG.warning("non-URI predicate; skipped")
                 continue
-            s_kind = KIND_URI if s[0] == "uri" else KIND_BNODE
-            if o[0] == "uri":
-                orow = (KIND_URI, o[1], None, None, None)
-            elif o[0] == "bnode":
-                orow = (KIND_BNODE, o[1], None, None, None)
-            else:
-                _, lex, dt, lang = o
-                num = None
-                if dt in NUMERIC_DATATYPES:
-                    try:
-                        num = float(lex)
-                    except ValueError:
-                        num = None
-                orow = (
-                    KIND_LITERAL, lex, dt, lang.lower() if lang else None,
-                    num,
-                )
-            rows.append((g, s[1], s_kind, p[1]) + orow)
+            rows.append(_quad(g, term_row(s), p.value, term_row(o)))
     return _bnode_namespace(
         spark.createDataFrame(rows, QUADS_SCHEMA), namespace_bnodes
     )
@@ -710,32 +666,6 @@ def trix_from_quads(quads: DataFrame) -> str:
         out.append("</graph>")
     out.append("</TriX>")
     return "\n".join(out) + "\n"
-
-
-def _triples_to_quads(spark: SparkSession, triples: list, graph: str) -> DataFrame:
-    from fourstore_spark.sparql import algebra as A
-
-    rows = []
-    for tp in triples:
-        if isinstance(tp.s, A.Iri):
-            s, s_kind = tp.s.value, KIND_URI
-        else:
-            s, s_kind = "_:" + tp.s.label, KIND_BNODE
-        o = tp.o
-        if isinstance(o, A.Iri):
-            orow = (KIND_URI, o.value, None, None, None)
-        elif isinstance(o, A.BNode):
-            orow = (KIND_BNODE, "_:" + o.label, None, None, None)
-        else:
-            num = None
-            if o.dt in NUMERIC_DATATYPES:
-                try:
-                    num = float(o.lex)
-                except ValueError:
-                    num = None
-            orow = (KIND_LITERAL, o.lex, o.dt, o.lang, num)
-        rows.append((graph, s, s_kind, tp.p.value) + orow)
-    return spark.createDataFrame(rows, QUADS_SCHEMA)
 
 
 def load_rdf(

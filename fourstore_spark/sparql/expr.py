@@ -38,6 +38,10 @@ from fourstore_spark.model import (
     XSD_FLOAT,
     XSD_INTEGER,
     XSD_STRING,
+    TERM_DDL,
+    const_term_col,
+    num_col,
+    term_row,
     term_struct,
 )
 from fourstore_spark.sparql import algebra as A
@@ -51,9 +55,7 @@ def _NULL_D() -> Column:
 
 
 def null_term() -> Column:
-    return F.lit(None).cast(
-        "struct<kind:tinyint,lex:string,dt:string,lang:string,num:double>"
-    )
+    return F.lit(None).cast(TERM_DDL)
 
 
 def make_uri(lex: Column) -> Column:
@@ -115,17 +117,8 @@ def make_datetime(ts: Column, dt: str = XSD_DATETIME) -> Column:
 def const_term(t) -> Column:
     """Constant Iri/Literal -> term struct (const_literal_to_rid,
     src/frontend/query.c:2015-2077, minus the hashing)."""
-    if isinstance(t, A.Iri):
-        return make_uri(F.lit(t.value))
-    if isinstance(t, A.Literal):
-        num = F.lit(float(t.lex)) if t.dt in NUMERIC_DATATYPES else _NULL_D()
-        return term_struct(
-            F.lit(KIND_LITERAL),
-            F.lit(t.lex),
-            F.lit(t.dt).cast("string") if t.dt else _NULL_S(),
-            F.lit(t.lang).cast("string") if t.lang else _NULL_S(),
-            num,
-        )
+    if isinstance(t, (A.Iri, A.Literal)):
+        return const_term_col(term_row(t))
     raise TypeError(f"not a constant term: {t!r}")
 
 
@@ -1095,8 +1088,7 @@ def _call_body(name: str, args: list, base: str = "") -> Column:
 
 
 def _retyped(lex: Column, dt: Column) -> Column:
-    num = F.when(dt.isin(list(NUMERIC_DATATYPES)), lex.cast("double"))
-    return term_struct(F.lit(KIND_LITERAL), lex, dt, _NULL_S(), num)
+    return term_struct(F.lit(KIND_LITERAL), lex, dt, _NULL_S(), num_col(lex, dt))
 
 
 def _compile_cast(dt_iri: str, t: Column) -> Column:

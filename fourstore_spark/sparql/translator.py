@@ -37,12 +37,21 @@ from fourstore_spark.model import (
     KIND_BNODE,
     KIND_LITERAL,
     KIND_URI,
-    NUMERIC_DATATYPES,
-    TERM_SCHEMA,
+    TERM_DDL,
     XSD_DECIMAL,
     XSD_DOUBLE,
     XSD_FLOAT,
+    bnode_row,
+    bnode_term,
+    const_term_col,
+    iri_row,
+    quad_cols,
+    quad_term,
+    term_of,
     term_order_key,
+    term_rid,
+    term_row,
+    uri_term,
 )
 from fourstore_spark.sparql import algebra as A
 from fourstore_spark.sparql.expr import (
@@ -58,8 +67,6 @@ from fourstore_spark.sparql.expr import (
     null_term,
 )
 from fourstore_spark.model import XSD_INTEGER
-
-TERM_DDL = "struct<kind:tinyint,lex:string,dt:string,lang:string,num:double>"
 
 # SERVICE (federated query) driver guards: queries longer than the GET
 # limit ship as protocol §2.1.2 POST; the remote answer is driver-
@@ -104,20 +111,6 @@ class Sol:
     @property
     def variables(self) -> list[str]:
         return self.df.columns
-
-
-def term_rid(term: Column) -> Column:
-    """64-bit term key — the fs_rid analogue (4s-hash.h:52,68: every term
-    hashes to an fs_rid; joins and dedup compare RIDs, never lexical
-    forms). Join conditions compare these 8-byte keys instead of the full
-    term struct: exchanges hash a long, sort-merge sorts longs, and no
-    string comparison happens per row. Like the reference we accept the
-    2^-64 collision risk (the reference's own group-by hash notes "no
-    guarantee of non-collision", group.c:47-48). ``num`` is excluded: it
-    is derived from (lex, dt). NULL inputs are skipped by xxhash64, which
-    makes the subject-position hash (dt/lang absent) agree with the
-    object-position hash of the same URI."""
-    return F.xxhash64(term["kind"], term["lex"], term["dt"], term["lang"])
 
 
 def _expr_contains_exists(e) -> bool:
@@ -509,8 +502,6 @@ class Translator:
         import urllib.request
         import uuid as _uuid
 
-        from fourstore_spark.model import NUMERIC_DATATYPES
-
         prologue = "".join(
             f"PREFIX {p}: <{iri}>\n" for p, iri in node.prefixes.items()
         )
@@ -581,22 +572,12 @@ class Translator:
         def term(b):
             if b is None:
                 return None
-            kind = {
-                "uri": KIND_URI,
-                "bnode": KIND_BNODE,
-            }.get(b.get("type"), KIND_LITERAL)
-            lex = b.get("value", "")
-            if kind == KIND_BNODE:
-                lex = bnode_ns + lex
-            dt = b.get("datatype")
-            lang = b.get("xml:lang")
-            num = None
-            if kind == KIND_LITERAL and dt in NUMERIC_DATATYPES:
-                try:
-                    num = float(lex)
-                except ValueError:
-                    num = None
-            return (kind, lex, dt, lang, num)
+            kind, lex = b.get("type"), b.get("value", "")
+            if kind == "uri":
+                return iri_row(lex)
+            if kind == "bnode":
+                return bnode_row(bnode_ns + lex)
+            return term_row((lex, b.get("datatype"), b.get("xml:lang")))
 
         rows = [
             tuple(term(b.get(v)) for v in varnames)
@@ -662,54 +643,18 @@ class Translator:
         cond = []
         proj: dict[str, Column] = {}
 
-        def s_term() -> Column:
-            return F.struct(
-                F.col("s_kind").alias("kind"),
-                F.col("s").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            )
-
-        def p_term() -> Column:
-            return F.struct(
-                F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                F.col("p").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            )
-
-        def g_term() -> Column:
-            return F.struct(
-                F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                F.col("g").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            )
-
-        def o_term() -> Column:
-            return F.struct(
-                F.col("o_kind").alias("kind"),
-                F.col("o_lex").alias("lex"),
-                F.col("o_dt").alias("dt"),
-                F.col("o_lang").alias("lang"),
-                F.col("o_num").alias("num"),
-            )
-
-        def slot_var(term, col_expr):
+        def slot_var(term, slot):
             name = term.name if isinstance(term, A.Var) else "__bn_" + term.label
             if name in proj:
                 # repeated variable in one pattern (FS_BIND_SAME_*,
                 # src/common/4s-datatypes.h:23-38)
-                cond.append(proj[name] == col_expr())
+                cond.append(proj[name] == quad_term(slot))
             else:
-                proj[name] = col_expr()
+                proj[name] = quad_term(slot)
 
         # subject
         if isinstance(tp.s, (A.Var, A.BNode)):
-            slot_var(tp.s, s_term)
+            slot_var(tp.s, "s")
         elif isinstance(tp.s, A.Iri):
             cond.append(F.col("s") == tp.s.value)
             cond.append(F.col("s_kind") == KIND_URI)
@@ -717,7 +662,7 @@ class Translator:
             raise ValueError("literal subject")
         # predicate
         if isinstance(tp.p, A.Var):
-            slot_var(tp.p, p_term)
+            slot_var(tp.p, "p")
         elif isinstance(tp.p, A.Iri):
             cond.append(F.col("p") == tp.p.value)
         elif isinstance(tp.p, A.PathNeg):
@@ -729,7 +674,7 @@ class Translator:
                 )
         # object
         if isinstance(tp.o, (A.Var, A.BNode)):
-            slot_var(tp.o, o_term)
+            slot_var(tp.o, "o")
         elif isinstance(tp.o, A.Iri):
             cond.append(F.col("o_kind") == KIND_URI)
             cond.append(F.col("o_lex") == tp.o.value)
@@ -740,7 +685,7 @@ class Translator:
             cond.append(F.col("o_lang").eqNullSafe(F.lit(tp.o.lang)))
         # graph variable binding
         if isinstance(graph, A.Var):
-            slot_var(graph, g_term)
+            slot_var(graph, "g")
 
         for c in cond:
             df = df.where(c)
@@ -932,22 +877,6 @@ class Translator:
             & col["lang"].eqNullSafe(F.lit(term.lang))
         )
 
-    @staticmethod
-    def _term_lit(term) -> Column:
-        """Term-struct literal for a constant endpoint (num left NULL —
-        term_rid excludes it, so RID joins against store terms agree)."""
-        if isinstance(term, A.Iri):
-            kind, lex, dt, lang = KIND_URI, term.value, None, None
-        else:
-            kind, lex, dt, lang = KIND_LITERAL, term.lex, term.dt, term.lang
-        return F.struct(
-            F.lit(kind).cast("tinyint").alias("kind"),
-            F.lit(lex).alias("lex"),
-            F.lit(dt).cast("string").alias("dt"),
-            F.lit(lang).cast("string").alias("lang"),
-            F.lit(None).cast("double").alias("num"),
-        )
-
     def _path_mod_sol(self, s, path: A.PathMod, o, graph) -> Sol:
         pa, pb = self._fresh("pa"), self._fresh("pb")
         step_sol = self._path_sol(A.Var(pa), path.inner, A.Var(pb), graph)
@@ -1065,17 +994,11 @@ class Translator:
         o_const = not isinstance(o, (A.Var, A.BNode))
         if s_const or o_const:
             term = s if s_const else o
-            node = self._term_lit(term)
+            node = const_term_col(term_row(term))
             if ctx:
                 # one zero-length row per named graph in scope
                 g = self._graph_filter(self.quads, graph).select(
-                    F.struct(
-                        F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                        F.col("g").alias("lex"),
-                        F.lit(None).cast("string").alias("dt"),
-                        F.lit(None).cast("string").alias("lang"),
-                        F.lit(None).cast("double").alias("num"),
-                    ).alias(ctx[0])
+                    quad_term("g").alias(ctx[0])
                 ).distinct()
                 out = g.select(node.alias(pa), node.alias(pb), ctx[0])
             else:
@@ -1104,37 +1027,9 @@ class Translator:
         as a __node term-struct column (+ the graph variable column when
         inside GRAPH ?g)."""
         df = self._graph_filter(self.quads, graph)
-        g_cols = []
-        if ctx:
-            g_cols = [
-                F.struct(
-                    F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                    F.col("g").alias("lex"),
-                    F.lit(None).cast("string").alias("dt"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("double").alias("num"),
-                ).alias(ctx[0])
-            ]
-        subs = df.select(
-            F.struct(
-                F.col("s_kind").alias("kind"),
-                F.col("s").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            ).alias("__node"),
-            *g_cols,
-        )
-        objs = df.select(
-            F.struct(
-                F.col("o_kind").alias("kind"),
-                F.col("o_lex").alias("lex"),
-                F.col("o_dt").alias("dt"),
-                F.col("o_lang").alias("lang"),
-                F.col("o_num").alias("num"),
-            ).alias("__node"),
-            *g_cols,
-        )
+        g_cols = [quad_term("g").alias(ctx[0])] if ctx else []
+        subs = df.select(quad_term("s").alias("__node"), *g_cols)
+        objs = df.select(quad_term("o").alias("__node"), *g_cols)
         return subs.unionByName(objs).distinct()
 
     def _bind_endpoints(
@@ -1244,13 +1139,7 @@ class Translator:
         df = self._graph_filter(self.quads, graph)
 
         df = df.where(F.col("p").isin([tp.p.value for tp, _ in patterns]))
-        o_term = F.struct(
-            F.col("o_kind").alias("kind"),
-            F.col("o_lex").alias("lex"),
-            F.col("o_dt").alias("dt"),
-            F.col("o_lang").alias("lang"),
-            F.col("o_num").alias("num"),
-        )
+        o_term = quad_term("o")
         # all intermediate columns use internal __-prefixed names and only
         # alias to the SPARQL variable in the final projection: a variable
         # named ?s / ?s_kind / ?g would otherwise clobber the groupBy key
@@ -1303,26 +1192,10 @@ class Translator:
             # explode drops subjects lacking the predicate — inner semantics
             out = out.withColumn(ename, F.explode(F.col(name)))
 
-        proj = [
-            F.struct(
-                F.col("s_kind").alias("kind"),
-                F.col("s").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            ).alias(sname)
-        ]
+        proj = [quad_term("s").alias(sname)]
         names = [sname]
         if isinstance(graph, A.Var):
-            proj.append(
-                F.struct(
-                    F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                    F.col("g").alias("lex"),
-                    F.lit(None).cast("string").alias("dt"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("double").alias("num"),
-                ).alias(graph.name)
-            )
+            proj.append(quad_term("g").alias(graph.name))
             names.append(graph.name)
         for col, oname in ovars:
             proj.append(F.col(col).alias(oname))
@@ -1361,15 +1234,6 @@ class Translator:
             if not self.union_default_graph:
                 return F.filter(vals, lambda x: x["g"] == DEFAULT_GRAPH)
             return vals
-
-        def term_of(x: Column) -> Column:
-            return F.struct(
-                x["kind"].alias("kind"),
-                x["lex"].alias("lex"),
-                x["dt"].alias("dt"),
-                x["lang"].alias("lang"),
-                x["num"].alias("num"),
-            )
 
         def graph_cond(x: Column) -> Column | None:
             # flat-column analogue of graph_vals: a predicate the store
@@ -1455,15 +1319,7 @@ class Translator:
             df = df.withColumn(name + "e", F.explode(F.col(name)))
             df = df.withColumn(ocol, term_of(F.col(name + "e")))
 
-        proj = [
-            F.struct(
-                F.col("s_kind").alias("kind"),
-                F.col("s").alias("lex"),
-                F.lit(None).cast("string").alias("dt"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("double").alias("num"),
-            ).alias(sname)
-        ]
+        proj = [quad_term("s").alias(sname)]
         names = [sname]
         for col, oname in ovars:
             proj.append(F.col(col).alias(oname))
@@ -1926,16 +1782,7 @@ class Translator:
     def _values(self, v: A.ValuesTable) -> Sol:
         rows = []
         for row in v.rows:
-            out = []
-            for t in row:
-                if t is None:
-                    out.append(None)
-                elif isinstance(t, A.Iri):
-                    out.append((KIND_URI, t.value, None, None, None))
-                else:
-                    num = float(t.lex) if t.dt in NUMERIC_DATATYPES else None
-                    out.append((KIND_LITERAL, t.lex, t.dt, t.lang, num))
-            rows.append(tuple(out))
+            rows.append(tuple(None if t is None else term_row(t) for t in row))
         ddl = ", ".join(f"`{name}` {TERM_DDL}" for name in v.variables)
         df = self.spark.createDataFrame(rows, ddl)
         certain = frozenset(
@@ -2305,13 +2152,8 @@ class Translator:
                 if isinstance(t, A.Var):
                     return F.col(t.name) if t.name in sol.df.columns else null_term()
                 if isinstance(t, A.BNode):
-                    lex = F.concat(F.lit(f"_:c{t.label}_"), F.col("__row").cast("string"))
-                    return F.struct(
-                        F.lit(KIND_BNODE).cast("tinyint").alias("kind"),
-                        lex.alias("lex"),
-                        F.lit(None).cast("string").alias("dt"),
-                        F.lit(None).cast("string").alias("lang"),
-                        F.lit(None).cast("double").alias("num"),
+                    return bnode_term(
+                        F.concat(F.lit(f"_:c{t.label}_"), F.col("__row").cast("string"))
                     )
                 return const_term(t)
 
@@ -2334,16 +2176,7 @@ class Translator:
         out = parts[0]
         for p_ in parts[1:]:
             out = out.unionByName(p_)
-        flat = out.select(
-            F.col("st")["lex"].alias("s"),
-            F.col("st")["kind"].alias("s_kind"),
-            F.col("pt")["lex"].alias("p"),
-            F.col("ot")["kind"].alias("o_kind"),
-            F.col("ot")["lex"].alias("o_lex"),
-            F.col("ot")["dt"].alias("o_dt"),
-            F.col("ot")["lang"].alias("o_lang"),
-            F.col("ot")["num"].alias("o_num"),
-        )
+        flat = out.select(*quad_cols(F.col("st"), F.col("pt"), F.col("ot")))
         return flat.distinct()
 
     def _describe(self, q: A.Query, sol: Sol) -> DataFrame:
@@ -2360,13 +2193,7 @@ class Translator:
             else:
                 nodes.append(
                     self.spark.createDataFrame([(t.value,)], "lex string").select(
-                        F.struct(
-                            F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                            F.col("lex").alias("lex"),
-                            F.lit(None).cast("string").alias("dt"),
-                            F.lit(None).cast("string").alias("lang"),
-                            F.lit(None).cast("double").alias("num"),
-                        ).alias("t")
+                        uri_term(F.col("lex")).alias("t")
                     )
                 )
         if not nodes:

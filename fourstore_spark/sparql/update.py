@@ -31,11 +31,14 @@ from pyspark.sql import functions as F
 
 from fourstore_spark.model import (
     DEFAULT_GRAPH,
-    KIND_BNODE,
     KIND_LITERAL,
-    KIND_URI,
-    NUMERIC_DATATYPES,
     QUADS_SCHEMA,
+    TERM_DDL,
+    bnode_row,
+    bnode_term,
+    const_term_col,
+    quad_cols,
+    term_row,
 )
 from fourstore_spark.sparql import algebra as A
 from fourstore_spark.sparql.parser import parse_update
@@ -374,28 +377,16 @@ class UpdateEngine:
         rows = []
         for q in quads:
             g = q.g.value if isinstance(q.g, A.Iri) else bare_g
-            if isinstance(q.s, A.Iri):
-                s, s_kind = q.s.value, KIND_URI
-            elif isinstance(q.s, A.BNode):
-                s, s_kind = self._fresh_bnode(q.s.label), KIND_BNODE
-            else:
+            if not isinstance(q.s, (A.Iri, A.BNode)):
                 raise ValueError("literal/var subject in data block")
-            p = q.p.value
-            o = q.o
-            if isinstance(o, A.Iri):
-                orow = (KIND_URI, o.value, None, None, None)
-            elif isinstance(o, A.BNode):
-                orow = (KIND_BNODE, self._fresh_bnode(o.label), None, None, None)
-            else:
-                num = None
-                if o.dt in NUMERIC_DATATYPES:
-                    try:
-                        num = float(o.lex)
-                    except ValueError:
-                        num = None
-                orow = (KIND_LITERAL, o.lex, o.dt, o.lang, num)
-            rows.append((g, s, s_kind, p) + orow)
+            s_kind, s = self._const_row(q.s)[:2]
+            rows.append((g, s, s_kind, q.p.value) + self._const_row(q.o))
         return self.spark.createDataFrame(rows, QUADS_SCHEMA)
+
+    def _const_row(self, t) -> tuple:
+        if isinstance(t, A.BNode):
+            return bnode_row(self._fresh_bnode(t.label))
+        return term_row(t)
 
     def _fresh_bnode(self, label: str) -> str:
         # bnode ids are scoped per update request (the reference allocates
@@ -437,42 +428,15 @@ class UpdateEngine:
         def term(t, bnode_tag):
             if isinstance(t, A.Var):
                 return F.col(t.name) if t.name in cols else F.lit(None).cast(
-                    "struct<kind:tinyint,lex:string,dt:string,lang:string,num:double>"
+                    TERM_DDL
                 )
             if isinstance(t, A.BNode):
                 if bnodes_error:
                     raise ValueError("blank nodes not allowed in DELETE template")
-                return F.struct(
-                    F.lit(KIND_BNODE).cast("tinyint").alias("kind"),
-                    F.concat(
-                        F.lit(f"_:t{bnode_tag}_{t.label}_"), F.col("__row")
-                    ).alias("lex"),
-                    F.lit(None).cast("string").alias("dt"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("double").alias("num"),
+                return bnode_term(
+                    F.concat(F.lit(f"_:t{bnode_tag}_{t.label}_"), F.col("__row"))
                 )
-            if isinstance(t, A.Iri):
-                return F.struct(
-                    F.lit(KIND_URI).cast("tinyint").alias("kind"),
-                    F.lit(t.value).alias("lex"),
-                    F.lit(None).cast("string").alias("dt"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("double").alias("num"),
-                )
-            # literal
-            num = None
-            if t.dt in NUMERIC_DATATYPES:
-                try:
-                    num = float(t.lex)
-                except ValueError:
-                    num = None
-            return F.struct(
-                F.lit(KIND_LITERAL).cast("tinyint").alias("kind"),
-                F.lit(t.lex).alias("lex"),
-                F.lit(t.dt).cast("string").alias("dt"),
-                F.lit(t.lang).cast("string").alias("lang"),
-                F.lit(num).cast("double").alias("num"),
-            )
+            return const_term_col(term_row(t))
 
         for i, q in enumerate(templates):
             if isinstance(q.g, A.Var):
@@ -485,19 +449,8 @@ class UpdateEngine:
                 gcol = F.lit(q.g.value)
             else:
                 gcol = F.lit(default_g)
-            st = term(q.s, i)
-            pt = term(q.p, i)
-            ot = term(q.o, i)
             part = df.select(
-                gcol.alias("g"),
-                st["lex"].alias("s"),
-                st["kind"].alias("s_kind"),
-                pt["lex"].alias("p"),
-                ot["kind"].alias("o_kind"),
-                ot["lex"].alias("o_lex"),
-                ot["dt"].alias("o_dt"),
-                ot["lang"].alias("o_lang"),
-                ot["num"].alias("o_num"),
+                gcol.alias("g"), *quad_cols(term(q.s, i), term(q.p, i), term(q.o, i))
             ).where(
                 F.col("g").isNotNull()
                 & F.col("s").isNotNull()

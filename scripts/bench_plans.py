@@ -1,7 +1,8 @@
-"""Dump .explain("formatted") for every bench.py query to plans/r12/.
+"""Dump .explain("formatted") for every bench.py query.
 
-Usage: python scripts/bench_plans.py <suffix>
-       (writes plans/r12/<query>_<suffix>.txt; suffix = before|after)
+Usage: python scripts/bench_plans.py <suffix> [out_dir]
+       (writes <out_dir>/<query>_<suffix>.txt; suffix = before|after;
+       out_dir defaults to plans/r12)
 
 Reuses bench.py's exact query construction (same store, same params) but
 captures the compiled physical plan instead of executing, so it can run
@@ -26,7 +27,7 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out_dir = os.path.join(
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", "r12",
     )
