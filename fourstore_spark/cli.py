@@ -47,6 +47,20 @@ def _swap_store(spark, quads, store: str) -> None:
     layout.replace(store, staged)
 
 
+def _nt_arg(text: str) -> tuple | None:
+    """Term row of an N-Triples term given on the command line, or None
+    when it does not parse."""
+    from fourstore_spark.sources.rdfio import _TERM_RE, _nt_term
+
+    m = _TERM_RE.match(text)
+    if not m or m.group("dot") is not None:
+        return None
+    try:
+        return _nt_term(m)
+    except ValueError:
+        return None
+
+
 def _engine(spark, store: str):
     from fourstore_spark.sparql.engine import SparqlEngine
     from fourstore_spark.store import read_store
@@ -149,10 +163,10 @@ def main(argv: list[str] | None = None) -> int:
         help="low-level quad-pattern scan, prints N-Quads (== 4s-bind)",
     )
     bnd.add_argument("store")
-    bnd.add_argument("-s", default=None, help="subject IRI/bnode")
-    bnd.add_argument("-p", default=None, help="predicate IRI")
+    bnd.add_argument("-s", default=None, help="subject <iri> or _:label")
+    bnd.add_argument("-p", default=None, help="predicate <iri>")
     bnd.add_argument("-o", default=None, help="object N-Triples term")
-    bnd.add_argument("-g", default=None, help="graph IRI")
+    bnd.add_argument("-g", default=None, help="graph <iri>")
     bnd.add_argument("--limit", type=int, default=0, help="0 = all")
 
     txn = sub.add_parser(
@@ -218,14 +232,12 @@ def main(argv: list[str] | None = None) -> int:
         # 4s-rid (src/utilities/4s-rid.c): prints the RID a term hashes
         # to; here the engine's 64-bit term key (model.term_rid)
         from fourstore_spark.model import const_term_col, term_rid
-        from fourstore_spark.sources.rdfio import _TERM_RE, _nt_term
 
-        m = _TERM_RE.match(args.term)
-        if not m or m.group("dot") is not None:
+        t = _nt_arg(args.term)
+        if t is None:
             print(f"unparsable term: {args.term!r}", file=sys.stderr)
             return 1
-        term = const_term_col(_nt_term(m))
-        row = spark.range(1).select(term_rid(term).alias("rid")).head()
+        row = spark.range(1).select(term_rid(const_term_col(t)).alias("rid")).head()
         print(row["rid"])
         return 0
 
@@ -238,7 +250,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
-        from fourstore_spark.model import KIND_BNODE, KIND_URI, quad_term, term_rid
+        from fourstore_spark.model import nt_term, quad_term, stored_label, term_rid
         from fourstore_spark.store import read_store
 
         q = read_store(spark, args.store)
@@ -260,25 +272,12 @@ def main(argv: list[str] | None = None) -> int:
         for r in hits:
             found.setdefault(r["rid"], []).append(r)
 
-        def nt(r):
-            if r["kind"] == KIND_URI:
-                return f"<{r['lex']}>"
-            if r["kind"] == KIND_BNODE:
-                return r["lex"]
-            import json as _json
-
-            s = _json.dumps(r["lex"])
-            if r["lang"]:
-                return f"{s}@{r['lang']}"
-            if r["dt"]:
-                return f"{s}^^<{r['dt']}>"
-            return s
-
         status = 0
         for rid_v in args.rids:
             if rid_v in found:
                 for r in found[rid_v]:
-                    print(f"{rid_v}\t{nt(r)}")
+                    nt = nt_term(r["kind"], r["lex"], r["dt"], r["lang"], stored_label)
+                    print(f"{rid_v}\t{nt}")
             else:
                 # 4s-resolve prints an error marker for unknown RIDs
                 print(f"{rid_v}\t#unknown#")
@@ -397,34 +396,31 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "bind":
         # 4s-bind (src/frontend/4s-bind.c): the raw quad-pattern scan,
-        # constant slots pushed down to the parquet scan
+        # constant slots pushed down to the parquet scan as plain column
+        # comparisons
         from pyspark.sql import functions as F
 
-        from fourstore_spark.sources.rdfio import (
-            _TERM_RE,
-            parse_nt_line,
-        )
         from fourstore_spark.sources.rdfio import quads_to_nq_lines
         from fourstore_spark.store import read_store
 
         df = read_store(spark, args.store)
-        if args.g is not None:
-            df = df.where(F.col("g") == args.g)
-        if args.s is not None:
-            s = args.s[1:-1] if args.s.startswith("<") else args.s
-            df = df.where(F.col("s") == s)
-        if args.p is not None:
-            p = args.p[1:-1] if args.p.startswith("<") else args.p
-            df = df.where(F.col("p") == p)
-        if args.o is not None:
-            # reuse the N-Triples term grammar for the object constant
-            q = parse_nt_line(f"<urn:x> <urn:x> {args.o} .")
-            df = df.where(
-                (F.col("o_kind") == q[4])
-                & (F.col("o_lex") == q[5])
-                & (F.col("o_dt").eqNullSafe(F.lit(q[6])))
-                & (F.col("o_lang").eqNullSafe(F.lit(q[7])))
-            )
+        # slot -> quad column -> index of its value in the term row
+        slots = {
+            "g": {"g": 1},
+            "s": {"s": 1, "s_kind": 0},
+            "p": {"p": 1},
+            "o": {"o_lex": 1, "o_kind": 0, "o_dt": 2, "o_lang": 3},
+        }
+        for slot, cols in slots.items():
+            text = getattr(args, slot)
+            if text is None:
+                continue
+            t = _nt_arg(text)
+            if t is None:
+                print(f"unparsable term: {text!r}", file=sys.stderr)
+                return 1
+            for c, i in cols.items():
+                df = df.where(F.col(c).isNull() if t[i] is None else F.col(c) == t[i])
         lines = quads_to_nq_lines(df)
         if args.limit:
             lines = lines.limit(args.limit)

@@ -45,6 +45,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from fourstore_spark.model import check_iri
 from fourstore_spark.sparql.engine import SparqlEngine
 from fourstore_spark.sparql.update import UpdateEngine
 
@@ -664,6 +665,8 @@ class SparqlHttpServer:
                     body = params.get("data") or params.get("__body", "")
                     if not graph:
                         return self._send(400, "missing graph parameter")
+                    if self._bad_graph(graph):
+                        return
                     return self._load(
                         graph, body, replace=False,
                         ct=params.get("mime-type"),
@@ -778,6 +781,17 @@ class SparqlHttpServer:
                     ),
                 )
 
+            def _bad_graph(self, graph: str) -> bool:
+                """Refuse (400) a /data/ graph that breaks the IRI rule
+                before anything parses the body or pastes the graph
+                into update text."""
+                try:
+                    check_iri(graph)
+                except ValueError as exc:
+                    self._send(400, _code_body(f"400 bad graph: {exc}"))
+                    return True
+                return False
+
             def _data_graph(self, params: dict) -> str | None:
                 """Graph URI for /data/ writes: the SPARQL 1.1 style
                 (?graph= param, httpd.c:690) or the pre-1.1 4store way
@@ -796,7 +810,7 @@ class SparqlHttpServer:
                     return self._send(
                         404, "PUT expects /data/<graph-uri> or ?graph="
                     )
-                if self._write_denied(params):
+                if self._write_denied(params) or self._bad_graph(graph):
                     return
                 self._load(graph, params.get("__body", ""), replace=True)
 
@@ -807,7 +821,7 @@ class SparqlHttpServer:
                     return self._send(
                         404, "DELETE expects /data/<graph-uri> or ?graph="
                     )
-                if self._write_denied(params):
+                if self._write_denied(params) or self._bad_graph(graph):
                     return
                 try:
                     with outer._write_lock:

@@ -53,7 +53,29 @@ src/frontend/query.c:2015-2077):
 - language tags are lowercased;
 - blank-node labels are chosen by the caller, which knows its scope (per
   import, per update request, per SERVICE call, per solution row);
-- the 64-bit term key (``term_rid``) hashes kind, lex, dt and lang.
+- the 64-bit term key (``term_rid``) hashes kind, lex, dt and lang;
+- the IRI rule: an IRI (URI term, datatype, graph) has no character of
+  ``[\\x00-\\x20<>"{}|^`\\\\]`` (the N-Triples IRIREF exclusions); the
+  language-tag rule: a tag matches ``[A-Za-z]+(-[A-Za-z0-9]+)*``. Python
+  form: ``check_iri``/``iri_row``/``term_row`` raise ``ValueError`` (an
+  import line is rejected or skipped, a SERVICE call fails); Column form:
+  ``iri_ok``/``lang_ok`` (IRI(), URI() and STRLANG() give unbound).
+
+Term writer — the inverse of ``term_row``, the one source of N-Triples
+term text (result documents, graph serializations, SERVICE VALUES, the
+CLI, the N-Quads dump), like the reference's one output dispatch
+(fs_query_results_output, src/frontend/results.c:2900-2918):
+
+- ``<iri>``, ``"lex"``, ``"lex"@lang``, ``"lex"^^<dt>`` or ``_:label``;
+  the lexical form escapes backslash, ``"``, LF, CR and TAB as
+  ``\\\\ \\" \\n \\r \\t`` (``NT_ESCAPES``, the one escape table), nothing else;
+- the caller chooses blank-node labels: a function from the stored label
+  to the written one (``_BnodeNamer``'s ``b0``, ``b1``, ... in result
+  documents; ``stored_label`` keeps the stored one);
+- ``nt_term`` is the Python form, ``nt_term_col`` the Column form; they
+  write the same text;
+- XML writers put IRIs, datatypes and language tags into attributes
+  through ``xml.sax.saxutils.quoteattr``.
 """
 
 from __future__ import annotations
@@ -197,9 +219,32 @@ def num_col(lex: Column, dt: Column) -> Column:
     return out
 
 
+_IRI_BAD = r'[\x00-\x20<>"{}|^`\\]'
+_LANG = r"[A-Za-z]+(?:-[A-Za-z0-9]+)*"
+_IRI_BAD_RE = re.compile(_IRI_BAD)
+_LANG_RE = re.compile(_LANG)
+
+
+def check_iri(iri: str) -> str:
+    """The IRI rule, Python form: ``iri`` itself, or ValueError."""
+    if _IRI_BAD_RE.search(iri):
+        raise ValueError(f"IRI with a character IRIREF excludes: {iri!r}")
+    return iri
+
+
+def iri_ok(iri: Column) -> Column:
+    """The IRI rule, Column form."""
+    return ~iri.rlike(_IRI_BAD)
+
+
+def lang_ok(lang: Column) -> Column:
+    """The language-tag rule, Column form."""
+    return lang.rlike(f"^{_LANG}$")
+
+
 def iri_row(iri: str) -> tuple:
-    """Term row of an IRI."""
-    return (KIND_URI, iri, None, None, None)
+    """Term row of an IRI (ValueError if it breaks the IRI rule)."""
+    return (KIND_URI, check_iri(iri), None, None, None)
 
 
 def bnode_row(label: str) -> tuple:
@@ -211,7 +256,8 @@ def bnode_row(label: str) -> tuple:
 def term_row(term) -> tuple:
     """An algebra Iri/BNode/Literal, or a raw ``(lex, dt, lang)`` literal
     triple -> ``(kind, lex, dt, lang, num)``. A BNode keeps its written
-    ``_:label``; callers that scope labels themselves use ``bnode_row``."""
+    ``_:label``; callers that scope labels themselves use ``bnode_row``.
+    ValueError if an IRI, datatype or language tag breaks its rule."""
     if isinstance(term, tuple):
         lex, dt, lang = term
     elif isinstance(term, A.Literal):
@@ -222,7 +268,67 @@ def term_row(term) -> tuple:
         return bnode_row("_:" + term.label)
     else:
         raise TypeError(f"not an RDF term: {term!r}")
+    if dt is not None:
+        check_iri(dt)
+    if lang and not _LANG_RE.fullmatch(lang):
+        raise ValueError(f"malformed language tag: {lang!r}")
     return (KIND_LITERAL, lex, dt, lang.lower() if lang else None, term_num(lex, dt))
+
+
+# ------------------------------------------------------------ term writer
+# N-Triples string escapes, backslash first
+NT_ESCAPES = (
+    ("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"),
+)
+
+
+def stored_label(lex: str) -> str:
+    """Blank-node label function that writes the label as stored."""
+    return lex[2:] if lex.startswith("_:") else lex
+
+
+def nt_iri(iri: str) -> str:
+    """N-Triples text of an IRI."""
+    return f"<{iri}>"
+
+
+def nt_term(kind: int, lex: str, dt, lang, bnode, iri=nt_iri) -> str:
+    """The term writer, Python form: N-Triples text of a term. ``bnode``
+    maps a stored blank-node label to the written one (without ``_:``);
+    ``iri`` writes URIs and datatypes (Turtle writers may compact them)."""
+    if kind == KIND_URI:
+        return iri(lex)
+    if kind == KIND_BNODE:
+        return "_:" + bnode(lex)
+    lex = lex or ""
+    for c, e in NT_ESCAPES:
+        lex = lex.replace(c, e)
+    if lang:
+        return f'"{lex}"@{lang}'
+    if dt:
+        return f'"{lex}"^^{iri(dt)}'
+    return f'"{lex}"'
+
+
+def nt_term_col(kind: Column, lex: Column, dt=None, lang=None) -> Column:
+    """The term writer, Column form: ``nt_term`` with ``stored_label``.
+    ``dt``/``lang`` left out mean a term that is never a tagged or typed
+    literal (a subject, predicate or graph)."""
+    iri = F.concat(F.lit("<"), lex, F.lit(">"))
+    label = F.concat(F.lit("_:"), F.regexp_replace(lex, "^_:", ""))
+    esc = F.coalesce(lex, F.lit(""))
+    for c, e in NT_ESCAPES:
+        esc = F.replace(esc, F.lit(c), F.lit(e))
+    lit = F.concat(F.lit('"'), esc, F.lit('"'))
+    if lang is not None:
+        lit = F.when(lang != "", F.concat(lit, F.lit("@"), lang)).when(
+            dt != "", F.concat(lit, F.lit("^^<"), dt, F.lit(">"))
+        ).otherwise(lit)
+    return (
+        F.when(kind == KIND_URI, iri)
+        .when(kind == KIND_BNODE, label)
+        .otherwise(lit)
+    )
 
 
 def _term_col(kind: Column, lex: Column, dt=None, lang=None, num=None) -> Column:

@@ -27,7 +27,7 @@ import logging
 import re
 import sys
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger("fourstore_spark.rdfio")
@@ -39,7 +39,9 @@ from fourstore_spark.model import (
     KIND_URI,
     QUADS_SCHEMA,
     bnode_row,
+    check_iri,
     iri_row,
+    nt_term_col,
     term_row,
 )
 from fourstore_spark.sparql import algebra as A
@@ -93,14 +95,16 @@ def _nt_term(m: re.Match) -> tuple:
         return iri_row(_unescape(m.group("iri")))
     if m.group("bnode") is not None:
         return bnode_row(m.group("bnode"))
-    return term_row((_unescape(m.group("lit")), m.group("dt"), m.group("lang")))
+    dt = m.group("dt")
+    lex = _unescape(m.group("lit"))
+    return term_row((lex, dt and _unescape(dt), m.group("lang")))
 
 
 def _quad(g: str, s: tuple, p: str, o: tuple) -> tuple:
     """QUADS_SCHEMA row from subject and object term rows."""
     if s[0] == KIND_LITERAL:
         raise ValueError(f"literal subject: {s[1]!r}")
-    return (g, s[1], s[0], p) + o
+    return (check_iri(g), s[1], s[0], check_iri(p)) + o
 
 
 def _triple_rows(triples: list, graph: str) -> list:
@@ -696,52 +700,23 @@ def load_rdf(
 
 
 # --------------------------------------------------------- serializers
-def _esc_lit(c: Column) -> Column:
-    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit('"'), F.lit('\\"'))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    c = F.replace(c, F.lit("\t"), F.lit("\\t"))
-    return c
-
-
-def nt_object(o_kind: Column, o_lex: Column, o_dt: Column, o_lang: Column) -> Column:
-    lit = F.concat(F.lit('"'), _esc_lit(o_lex), F.lit('"'))
-    lit = F.when(
-        o_lang.isNotNull(), F.concat(lit, F.lit("@"), o_lang)
-    ).when(
-        o_dt.isNotNull(), F.concat(lit, F.lit("^^<"), o_dt, F.lit(">"))
-    ).otherwise(lit)
-    return (
-        F.when(o_kind == KIND_URI, F.concat(F.lit("<"), o_lex, F.lit(">")))
-        .when(o_kind == KIND_BNODE, o_lex)
-        .otherwise(lit)
-    )
-
-
-def nt_subject(s: Column, s_kind: Column) -> Column:
-    return F.when(
-        s_kind == KIND_BNODE, s
-    ).otherwise(F.concat(F.lit("<"), s, F.lit(">")))
-
-
 def quads_to_nq_lines(quads: DataFrame, with_graph: bool = True) -> DataFrame:
     """One N-Quads (or N-Triples) line per quad, as a single 'value'
     column — write with df.write.text for a distributed dump
     (dump.c parity without the custom binary format)."""
-    parts = [
-        nt_subject(F.col("s"), F.col("s_kind")),
+    uri = F.lit(KIND_URI)
+    base = F.concat(
+        nt_term_col(F.col("s_kind"), F.col("s")),
         F.lit(" "),
-        F.concat(F.lit("<"), F.col("p"), F.lit(">")),
+        nt_term_col(uri, F.col("p")),
         F.lit(" "),
-        nt_object(F.col("o_kind"), F.col("o_lex"), F.col("o_dt"), F.col("o_lang")),
-    ]
-    base = F.concat(*parts)
+        nt_term_col(F.col("o_kind"), F.col("o_lex"), F.col("o_dt"), F.col("o_lang")),
+    )
     if with_graph:
         line = F.when(
             F.col("g") == DEFAULT_GRAPH, F.concat(base, F.lit(" ."))
         ).otherwise(
-            F.concat(base, F.lit(" <"), F.col("g"), F.lit("> ."))
+            F.concat(base, F.lit(" "), nt_term_col(uri, F.col("g")), F.lit(" ."))
         )
     else:
         line = F.concat(base, F.lit(" ."))

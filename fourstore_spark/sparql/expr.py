@@ -40,6 +40,8 @@ from fourstore_spark.model import (
     XSD_STRING,
     TERM_DDL,
     const_term_col,
+    iri_ok,
+    lang_ok,
     num_col,
     term_row,
     term_struct,
@@ -845,9 +847,11 @@ def _call_body(name: str, args: list, base: str = "") -> Column:
     if name in ("IRI", "URI"):
         # spec 17.4.2.6: a string argument resolves against the base IRI;
         # an IRI argument passes through unchanged
-        return F.when(a0["kind"] == KIND_URI, make_uri(a0["lex"])).when(
-            _string_like(a0), make_uri(_resolve_iri_col(a0["lex"], base))
-        ).otherwise(null_term())
+        # an IRI breaking the IRI rule is unbound
+        iri = F.when(a0["kind"] == KIND_URI, a0["lex"]).when(
+            _string_like(a0), _resolve_iri_col(a0["lex"], base)
+        )
+        return F.when(iri_ok(iri), make_uri(iri)).otherwise(null_term())
     if name == "BNODE":
         if args:
             # BNODE(expr) — spec 17.4.2.9: the same argument within the
@@ -895,7 +899,7 @@ def _call_body(name: str, args: list, base: str = "") -> Column:
         return F.coalesce(*args)
     if name == "STRLANG":
         return F.when(
-            _string_like(a0) & _string_like(args[1]),
+            _string_like(a0) & _string_like(args[1]) & lang_ok(args[1]["lex"]),
             make_string(a0["lex"], F.lower(args[1]["lex"])),
         ).otherwise(null_term())
     if name == "STRDT":

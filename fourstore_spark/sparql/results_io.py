@@ -14,8 +14,18 @@ from __future__ import annotations
 
 import json
 from xml.sax.saxutils import escape as xml_escape
+from xml.sax.saxutils import quoteattr
 
-from fourstore_spark.model import KIND_BNODE, KIND_LITERAL, KIND_URI
+from fourstore_spark.model import (
+    KIND_BNODE,
+    KIND_LITERAL,
+    KIND_URI,
+    XSD_DECIMAL,
+    XSD_DOUBLE,
+    XSD_INTEGER,
+    nt_iri,
+    nt_term,
+)
 
 
 class _BnodeNamer:
@@ -50,6 +60,23 @@ def _term_dict(term, bn: _BnodeNamer) -> dict | None:
     elif term["dt"]:
         out["datatype"] = term["dt"]
     return out
+
+
+def _nt_cell(term, bn: _BnodeNamer) -> str:
+    """Row struct -> N-Triples term text ('' when unbound)."""
+    if term is None or term["kind"] is None:
+        return ""
+    return nt_term(term["kind"], term["lex"], term["dt"], term["lang"], bn)
+
+
+def _nt_triple(row, bn: _BnodeNamer, iri=nt_iri) -> tuple:
+    """Triples-schema row -> N-Triples (or Turtle) subject, predicate and
+    object text."""
+    return (
+        nt_term(row["s_kind"], row["s"], None, None, bn, iri),
+        iri(row["p"]),
+        nt_term(row["o_kind"], row["o_lex"], row["o_dt"], row["o_lang"], bn, iri),
+    )
 
 
 def _iter_bindings(df, variables):
@@ -89,7 +116,7 @@ def select_xml(df, variables=None, ask: bool | None = None) -> str:
     variables = variables or df.columns
     out.append("  <head>")
     for v in variables:
-        out.append(f'    <variable name="{xml_escape(v)}"/>')
+        out.append(f"    <variable name={quoteattr(v)}/>")
     out.append("  </head>")
     out.append("  <results>")
     for binding in _iter_bindings(df, variables):
@@ -101,14 +128,12 @@ def select_xml(df, variables=None, ask: bool | None = None) -> str:
             elif t["type"] == "bnode":
                 body = f"<bnode>{val}</bnode>"
             elif "xml:lang" in t:
-                body = f'<literal xml:lang="{t["xml:lang"]}">{val}</literal>'
+                body = f"<literal xml:lang={quoteattr(t['xml:lang'])}>{val}</literal>"
             elif "datatype" in t:
-                body = (
-                    f'<literal datatype="{xml_escape(t["datatype"])}">{val}</literal>'
-                )
+                body = f"<literal datatype={quoteattr(t['datatype'])}>{val}</literal>"
             else:
                 body = f"<literal>{val}</literal>"
-            out.append(f'      <binding name="{xml_escape(v)}">{body}</binding>')
+            out.append(f"      <binding name={quoteattr(v)}>{body}</binding>")
         out.append("    </result>")
     out.append("  </results>")
     out.append("</sparql>")
@@ -125,24 +150,6 @@ def _csv_cell(term, bn: _BnodeNamer) -> str:
     if any(c in v for c in (",", '"', "\n", "\r")):
         return '"' + v.replace('"', '""') + '"'
     return v
-
-
-def _tsv_cell(term, bn: _BnodeNamer) -> str:
-    if term is None or term["kind"] is None:
-        return ""
-    kind = term["kind"]
-    if kind == KIND_URI:
-        return f"<{term['lex']}>"
-    if kind == KIND_BNODE:
-        return "_:" + bn(term["lex"])
-    v = (term["lex"] or "").replace("\\", "\\\\").replace('"', '\\"')
-    v = v.replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-    out = f'"{v}"'
-    if term["lang"]:
-        out += f"@{term['lang']}"
-    elif term["dt"]:
-        out += f"^^<{term['dt']}>"
-    return out
 
 
 def select_csv(df, variables=None) -> str:
@@ -162,8 +169,13 @@ def select_tsv(df, variables=None) -> str:
     bn = _BnodeNamer()
     lines = ["\t".join("?" + v for v in variables)]
     for row in df.toLocalIterator():
-        lines.append("\t".join(_tsv_cell(row[v], bn) for v in variables))
+        lines.append("\t".join(_nt_cell(row[v], bn) for v in variables))
     return "\n".join(lines) + "\n"
+
+
+# double lexical forms select_text writes without an appended "e0": the
+# XSD specials, and computed infinities ("inf" as C's printf spells it)
+_DOUBLE_SPECIALS = frozenset(["INF", "-INF", "+INF", "NaN", "inf", "-inf"])
 
 
 def select_text(df, variables=None, ask: bool | None = None) -> str:
@@ -173,42 +185,24 @@ def select_text(df, variables=None, ask: bool | None = None) -> str:
     forced '.'; double with a forced exponent), language tags uppercased
     (the reference's resource storage does), quoted strings otherwise.
     Served by the httpd for Accept: text/plain and -f text/ascii."""
-    from fourstore_spark.model import XSD_DECIMAL, XSD_DOUBLE, XSD_INTEGER
-
     if ask is not None:
         return "true\n" if ask else "false\n"
-
-    def esc(v: str) -> str:
-        return (
-            v.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-        )
 
     def cell(t) -> str:
         if t is None or t["kind"] is None:
             return ""
-        k = t["kind"]
-        lex = t["lex"] or ""
-        if k == KIND_URI:
-            return f"<{lex}>"
-        if k == KIND_BNODE:
-            return lex if lex.startswith("_:") else "_:" + lex
-        if t["lang"]:
-            return f'"{esc(lex)}"@{t["lang"].upper()}'
-        dt = t["dt"]
-        if dt == XSD_INTEGER:
-            return lex
-        if dt == XSD_DECIMAL:
-            return lex if "." in lex else lex + ".0"
-        if dt == XSD_DOUBLE:
-            return lex if ("e" in lex or lex in ("inf", "-inf")) else lex + "e0"
-        if dt:
-            return f'"{esc(lex)}"^^<{dt}>'
-        return f'"{esc(lex)}"'
+        lex, dt, lang = t["lex"] or "", t["dt"], t["lang"]
+        if t["kind"] == KIND_LITERAL and not lang:
+            if dt == XSD_INTEGER:
+                return lex
+            if dt == XSD_DECIMAL:
+                return lex if "." in lex else lex + ".0"
+            if dt == XSD_DOUBLE:
+                whole = "e" in lex.lower() or lex in _DOUBLE_SPECIALS
+                return lex if whole else lex + "e0"
+        return nt_term(t["kind"], lex, dt, lang and lang.upper(), bn)
 
+    bn = _BnodeNamer()
     variables = variables or df.columns
     lines = ["\t".join("?" + v for v in variables)]
     for row in df.toLocalIterator():
@@ -224,15 +218,6 @@ def select_testcase(df, variables=None, ask: bool | None = None) -> str:
     bnode per row, rs:binding [ rs:variable / rs:value ] per bound var;
     ASK renders rs:boolean. CONSTRUCT/DESCRIBE route to Turtle upstream
     (the reference does the same)."""
-
-    def esc(v: str) -> str:
-        return (
-            v.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-        )
 
     out = [
         "@prefix rs: "
@@ -255,19 +240,9 @@ def select_testcase(df, variables=None, ask: bool | None = None) -> str:
     for row in df.toLocalIterator():
         binds = []
         for v in variables:
-            t = row[v]
-            if t is None or t["kind"] is None:
+            val = _nt_cell(row[v], bn)
+            if not val:
                 continue
-            if t["kind"] == KIND_URI:
-                val = f"<{t['lex']}>"
-            elif t["kind"] == KIND_BNODE:
-                val = "_:" + bn(t["lex"])
-            else:
-                val = f'"{esc(t["lex"])}"'
-                if t["lang"]:
-                    val += f"@{t['lang']}"
-                elif t["dt"]:
-                    val += f"^^<{t['dt']}>"
             binds.append(
                 f'      rs:binding [ rs:variable "{v}" ;\n'
                 f"                   rs:value {val} ]"
@@ -280,36 +255,10 @@ def select_testcase(df, variables=None, ask: bool | None = None) -> str:
 def graph_ntriples(df) -> str:
     """Triples DataFrame (CONSTRUCT/DESCRIBE output schema) -> N-Triples
     text (the reference serializes via Raptor, results.c:1659-1898)."""
-
-    def esc(v: str) -> str:
-        return (
-            v.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-        )
-
     bn = _BnodeNamer()
-    lines = []
-    for row in df.toLocalIterator():
-        s = (
-            "_:" + bn(row["s"])
-            if row["s_kind"] == KIND_BNODE
-            else f"<{row['s']}>"
-        )
-        p = f"<{row['p']}>"
-        if row["o_kind"] == KIND_URI:
-            o = f"<{row['o_lex']}>"
-        elif row["o_kind"] == KIND_BNODE:
-            o = "_:" + bn(row["o_lex"])
-        else:
-            o = f'"{esc(row["o_lex"])}"'
-            if row["o_lang"]:
-                o += f"@{row['o_lang']}"
-            elif row["o_dt"]:
-                o += f"^^<{row['o_dt']}>"
-        lines.append(f"{s} {p} {o} .")
+    lines = [
+        " ".join(_nt_triple(row, bn)) + " ." for row in df.toLocalIterator()
+    ]
     return "\n".join(lines) + ("\n" if lines else "")
 
 
@@ -336,30 +285,21 @@ def graph_rdfxml(df) -> str:
             continue
         ns, local = m.group(1), m.group(2)
         if row["s_kind"] == KIND_BNODE:
-            subj = f'rdf:nodeID="{xml_escape(bn(row["s"]))}"'
+            subj = f"rdf:nodeID={quoteattr(bn(row['s']))}"
         else:
-            subj = f'rdf:about="{xml_escape(row["s"])}"'
+            subj = f"rdf:about={quoteattr(row['s'])}"
+        head = f"<{local} xmlns={quoteattr(ns)}"
         if row["o_kind"] == KIND_URI:
-            obj = (
-                f'<{local} xmlns="{xml_escape(ns)}" '
-                f'rdf:resource="{xml_escape(row["o_lex"])}"/>'
-            )
+            obj = f"{head} rdf:resource={quoteattr(row['o_lex'])}/>"
         elif row["o_kind"] == KIND_BNODE:
-            obj = (
-                f'<{local} xmlns="{xml_escape(ns)}" '
-                f'rdf:nodeID="{xml_escape(bn(row["o_lex"]))}"/>'
-            )
+            obj = f"{head} rdf:nodeID={quoteattr(bn(row['o_lex']))}/>"
         else:
-            attrs = ""
             if row["o_lang"]:
-                attrs = f' xml:lang="{xml_escape(row["o_lang"])}"'
+                head += f" xml:lang={quoteattr(row['o_lang'])}"
             elif row["o_dt"]:
-                attrs = f' rdf:datatype="{xml_escape(row["o_dt"])}"'
-            obj = (
-                f'<{local} xmlns="{xml_escape(ns)}"{attrs}>'
-                f'{xml_escape(row["o_lex"] or "")}</{local}>'
-            )
-        out.append(f'  <rdf:Description {subj}>')
+                head += f" rdf:datatype={quoteattr(row['o_dt'])}"
+            obj = f"{head}>{xml_escape(row['o_lex'] or '')}</{local}>"
+        out.append(f"  <rdf:Description {subj}>")
         out.append(f"    {obj}")
         out.append("  </rdf:Description>")
     out.append("</rdf:RDF>")
@@ -371,44 +311,12 @@ def graph_turtle(df) -> str:
     predicate lists (Raptor's turtle serializer parity). Terms use the
     N-Triples forms (no prefix compression — correct and simple; any
     Turtle parser accepts it)."""
-
-    def esc(v: str) -> str:
-        return (
-            v.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-        )
-
     bn = _BnodeNamer()
     by_subject: dict = {}
-    order: list = []
     for row in df.toLocalIterator():
-        s = (
-            "_:" + bn(row["s"])
-            if row["s_kind"] == KIND_BNODE
-            else f"<{row['s']}>"
-        )
-        p = f"<{row['p']}>"
-        if row["o_kind"] == KIND_URI:
-            o = f"<{row['o_lex']}>"
-        elif row["o_kind"] == KIND_BNODE:
-            o = "_:" + bn(row["o_lex"])
-        else:
-            o = f'"{esc(row["o_lex"])}"'
-            if row["o_lang"]:
-                o += f"@{row['o_lang']}"
-            elif row["o_dt"]:
-                o += f"^^<{row['o_dt']}>"
-        if s not in by_subject:
-            by_subject[s] = []
-            order.append(s)
-        by_subject[s].append(f"{p} {o}")
-    blocks = [
-        f"{s} " + " ;\n    ".join(pos) + " ." for s in order
-        for pos in [by_subject[s]]
-    ]
+        s, p, o = _nt_triple(row, bn)
+        by_subject.setdefault(s, []).append(f"{p} {o}")
+    blocks = [f"{s} " + " ;\n    ".join(pos) + " ." for s, pos in by_subject.items()]
     return "\n".join(blocks) + ("\n" if blocks else "")
 
 
@@ -423,41 +331,13 @@ def graph_turtle_abbrev(df, base: str | None = None) -> str:
     with `` ;``, objects comma-grouped, block terminated `` .`` plus a
     blank line. Rows are emitted in sorted (s, p, o) order."""
 
-    def esc(v: str) -> str:
-        return (
-            v.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-        )
-
     def iri(v: str) -> str:
         if v.startswith(_RDF_NS):
             return "rdf:" + v[len(_RDF_NS):]
-        return f"<{v}>"
+        return nt_iri(v)
 
     bn = _BnodeNamer()
-    triples = []
-    for row in df.toLocalIterator():
-        s = (
-            "_:" + bn(row["s"])
-            if row["s_kind"] == KIND_BNODE
-            else iri(row["s"])
-        )
-        p = iri(row["p"])
-        if row["o_kind"] == KIND_URI:
-            o = iri(row["o_lex"])
-        elif row["o_kind"] == KIND_BNODE:
-            o = "_:" + bn(row["o_lex"])
-        else:
-            o = f'"{esc(row["o_lex"])}"'
-            if row["o_lang"]:
-                o += f"@{row['o_lang']}"
-            elif row["o_dt"]:
-                o += f"^^{iri(row['o_dt'])}"
-        triples.append((s, p, o))
-    triples = sorted(set(triples))
+    triples = sorted({_nt_triple(row, bn, iri) for row in df.toLocalIterator()})
 
     out = []
     if base:

@@ -45,8 +45,10 @@ from fourstore_spark.model import (
     bnode_term,
     const_term_col,
     iri_row,
+    nt_term,
     quad_cols,
     quad_term,
+    stored_label,
     term_of,
     term_order_key,
     term_rid,
@@ -460,25 +462,11 @@ class Translator:
                 t = r[v]
                 if t is None or t["kind"] is None:
                     return ""  # certainty contract violated: bail out
-                if t["kind"] == KIND_URI:
-                    toks.append(f"<{t['lex']}>")
-                elif t["kind"] == KIND_BNODE:
+                if t["kind"] == KIND_BNODE:
                     return ""  # bnodes can't ship (and can't dedup-join)
-                else:
-                    lex = (
-                        (t["lex"] or "")
-                        .replace("\\", "\\\\")
-                        .replace('"', '\\"')
-                        .replace("\n", "\\n")
-                        .replace("\r", "\\r")
-                        .replace("\t", "\\t")
-                    )
-                    if t["lang"]:
-                        toks.append(f'"{lex}"@{t["lang"]}')
-                    elif t["dt"]:
-                        toks.append(f'"{lex}"^^<{t["dt"]}>')
-                    else:
-                        toks.append(f'"{lex}"')
+                toks.append(
+                    nt_term(t["kind"], t["lex"], t["dt"], t["lang"], stored_label)
+                )
             out_rows.append("(" + " ".join(toks) + ")")
         head = " ".join("?" + v for v in shared)
         return f"VALUES ({head}) {{ {' '.join(out_rows)} }}"
@@ -518,6 +506,22 @@ class Translator:
         params = urllib.parse.urlencode({"query": q, "output": "json"})
         sep = "&" if "?" in node.endpoint else "?"
         url = node.endpoint + sep + params
+        # blank nodes in a SPARQL result set are scoped to that result set
+        # (§18.5 / protocol): rewrite labels with a per-call unique prefix
+        # so a remote bnode can never RID-unify with a local bnode (or one
+        # from another SERVICE call) that happens to share its label
+        bnode_ns = "svc-" + _uuid.uuid4().hex[:12] + "-"
+
+        def term(b):
+            if b is None:
+                return None
+            kind, lex = b.get("type"), b.get("value", "")
+            if kind == "uri":
+                return iri_row(lex)
+            if kind == "bnode":
+                return bnode_row(bnode_ns + lex)
+            return term_row((lex, b.get("datatype"), b.get("xml:lang")))
+
         try:
             if len(url) > SERVICE_MAX_GET_URL:
                 # long queries exceed endpoint URL limits: SPARQL protocol
@@ -556,33 +560,18 @@ class Translator:
                     f"over the {SERVICE_MAX_ROWS}-row driver guard "
                     "(fourstore_spark.sparql.translator.SERVICE_MAX_ROWS)"
                 )
+            varnames = list(doc.get("head", {}).get("vars", []))
+            # a term breaking the IRI or language-tag rule fails the call
+            rows = [
+                tuple(term(b.get(v)) for v in varnames)
+                for b in doc.get("results", {}).get("bindings", [])
+            ]
         except Exception:
             if node.silent:
                 return self._unit()
             raise
-        varnames = list(doc.get("head", {}).get("vars", []))
         if not varnames:
             return self._unit()
-        # blank nodes in a SPARQL result set are scoped to that result set
-        # (§18.5 / protocol): rewrite labels with a per-call unique prefix
-        # so a remote bnode can never RID-unify with a local bnode (or one
-        # from another SERVICE call) that happens to share its label
-        bnode_ns = "svc-" + _uuid.uuid4().hex[:12] + "-"
-
-        def term(b):
-            if b is None:
-                return None
-            kind, lex = b.get("type"), b.get("value", "")
-            if kind == "uri":
-                return iri_row(lex)
-            if kind == "bnode":
-                return bnode_row(bnode_ns + lex)
-            return term_row((lex, b.get("datatype"), b.get("xml:lang")))
-
-        rows = [
-            tuple(term(b.get(v)) for v in varnames)
-            for b in doc.get("results", {}).get("bindings", [])
-        ]
         schema = ", ".join(f"`{v}` {TERM_DDL}" for v in varnames)
         df = self.spark.createDataFrame(rows, schema)
         certain = frozenset(
