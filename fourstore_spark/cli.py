@@ -36,17 +36,6 @@ def _spark():
     )
 
 
-def _swap_store(spark, quads, store: str) -> None:
-    """Write-new-then-swap: a store can't be overwritten while its own
-    parquet files feed the plan."""
-    from fourstore_spark import layout
-    from fourstore_spark.store import write_store
-
-    staged = layout.staging(store)
-    write_store(quads, staged)
-    layout.replace(store, staged)
-
-
 def _nt_arg(text: str) -> tuple | None:
     """Term row of an N-Triples term given on the command line, or None
     when it does not parse."""
@@ -59,13 +48,6 @@ def _nt_arg(text: str) -> tuple | None:
         return _nt_term(m)
     except ValueError:
         return None
-
-
-def _engine(spark, store: str):
-    from fourstore_spark.sparql.engine import SparqlEngine
-    from fourstore_spark.store import read_store
-
-    return SparqlEngine(spark, read_store(spark, store))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -285,8 +267,11 @@ def main(argv: list[str] | None = None) -> int:
         return status
 
     if args.cmd == "query":
+        from fourstore_spark.sparql.engine import SparqlEngine
+
         text = sys.stdin.read() if args.query == "-" else args.query
-        res = _engine(spark, args.store).query(text, soft_limit=args.soft_limit)
+        eng = SparqlEngine.from_store(spark, args.store)
+        res = eng.query(text, soft_limit=args.soft_limit)
         fmt = args.format
         if res.form in ("CONSTRUCT", "DESCRIBE") and fmt not in (
             "turtle", "rdfxml", "testcase"
@@ -297,11 +282,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "import":
         from fourstore_spark.model import DEFAULT_GRAPH
-        from fourstore_spark.sources.rdfio import load_rdf
-        from fourstore_spark.sparql.update import UpdateEngine, quads_add
-        from fourstore_spark.store import read_manifest, read_store, write_store
-
-        from fourstore_spark.sources.rdfio import report_skips
+        from fourstore_spark.sources.rdfio import load_rdf, report_skips
+        from fourstore_spark.sparql.update import quads_add
+        from fourstore_spark.store import read_manifest, read_store, replace_store
 
         if args.append:
             from fourstore_spark.store import append_quads
@@ -331,7 +314,7 @@ def main(argv: list[str] | None = None) -> int:
             df = load_rdf(spark, f, args.graph or DEFAULT_GRAPH)
             loaded.append((f, df))
             quads = quads_add(quads, df)
-        _swap_store(spark, quads, args.store)
+        replace_store(quads, args.store)
         for f, df in loaded:
             report_skips(df, f)
         print(f"imported {len(args.files)} file(s)", file=sys.stderr)
@@ -339,18 +322,19 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "update":
         from fourstore_spark.sparql.update import UpdateEngine
-        from fourstore_spark.store import write_store
+        from fourstore_spark.store import replace_store
 
         ue = UpdateEngine.restore(spark, args.store)
         text = sys.stdin.read() if args.update == "-" else args.update
         ue.update(text)
-        _swap_store(spark, ue.quads, args.store)
+        replace_store(ue.quads, args.store)
         return 0
 
     if args.cmd == "delete-model":
         # 4s-delete-model (src/frontend/delete-model.c:41): drop the
         # named graphs (or everything with --all)
         from fourstore_spark.sparql.update import UpdateEngine
+        from fourstore_spark.store import replace_store
 
         if not args.all and not args.models:
             print("delete-model: need --all or at least one model URI",
@@ -362,7 +346,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             for m in args.models:
                 ue.update(f"DROP SILENT GRAPH <{m}>")
-        _swap_store(spark, ue.quads, args.store)
+        replace_store(ue.quads, args.store)
         print(f"deleted {'ALL' if args.all else len(args.models)} model(s)",
               file=sys.stderr)
         return 0
@@ -378,6 +362,7 @@ def main(argv: list[str] | None = None) -> int:
             report_skips,
         )
         from fourstore_spark.sparql.update import empty_quads, quads_add
+        from fourstore_spark.store import replace_store
 
         quads = empty_quads(spark)
         loaded = []
@@ -388,7 +373,7 @@ def main(argv: list[str] | None = None) -> int:
                 df = quads_from_nt(spark, f)
             loaded.append((f, df))
             quads = quads_add(quads, df)
-        _swap_store(spark, quads, args.store)
+        replace_store(quads, args.store)
         for f, df in loaded:
             report_skips(df, f)
         print(f"restored from {len(args.dumps)} dump(s)", file=sys.stderr)
@@ -434,6 +419,7 @@ def main(argv: list[str] | None = None) -> int:
         # ONE transaction; any failure rolls the whole batch back and
         # leaves the on-disk store untouched
         from fourstore_spark.sparql.update import UpdateEngine
+        from fourstore_spark.store import replace_store
 
         ue = UpdateEngine.restore(spark, args.store)
         try:
@@ -444,7 +430,7 @@ def main(argv: list[str] | None = None) -> int:
         except Exception as exc:  # noqa: BLE001
             print(f"transaction rolled back: {exc}", file=sys.stderr)
             return 1
-        _swap_store(spark, ue.quads, args.store)
+        replace_store(ue.quads, args.store)
         print(f"committed {len(args.files)} file(s)", file=sys.stderr)
         return 0
 
@@ -452,10 +438,13 @@ def main(argv: list[str] | None = None) -> int:
         from fourstore_spark.httpd import SparqlHttpServer
         from fourstore_spark.sparql.update import UpdateEngine
 
+        # a store is opened like any other; without one the server
+        # starts its own empty engine. Either way updates get 4store's
+        # graph semantics, the parity of this surface.
         ue = (
-            UpdateEngine.restore(spark, args.store)
+            UpdateEngine.restore(spark, args.store, fourstore_graphs=True)
             if args.store
-            else UpdateEngine(spark)
+            else None
         )
         print(f"serving on :{args.port}", file=sys.stderr)
         SparqlHttpServer(

@@ -76,6 +76,19 @@ FS_ACL_DEFAULT_ADMIN = "4sadminuser"
 # materialization in this repo (stream_lm_filter.max_lm_rows etc.)
 MAX_ACL_ROWS = 100_000
 
+# A visibility: the graphs one apikey may read. ("deny", graphs) hides
+# the listed graphs — EVERYTHING when none are — and ("allow", graphs)
+# shows only the listed ones, none at all when empty.
+EVERYTHING = ("deny", ())
+
+# the two 403 bodies: a query without an apikey (httpd.c:1157 wording,
+# http_error shape: message line + server line), and a status page
+# without a known one
+_NO_APIKEY = "403 forbidden - apikey parameter has to be included in request."
+_BAD_APIKEY = (
+    "403 forbidden - valid apikey parameter has to be included in request."
+)
+
 
 class AclInfo:
     """Driver-side image of the store's ACL quads.
@@ -241,9 +254,10 @@ class SparqlHttpServer:
           allow-list; an extension kept for embedders who manage keys
           outside the store). Any known key may write."""
         self.spark = spark
-        # wildcard_delete: 4s-httpd deletes un-GRAPHed triples from every
-        # graph (update.c:127 wildcard model) — parity for this surface
-        self.ue = update_engine or UpdateEngine(spark, wildcard_delete=True)
+        # 4s-httpd deletes un-GRAPHed triples from every graph
+        # (update.c:127 wildcard model) and binds GRAPH ?g to the default
+        # graph too — parity for this surface
+        self.ue = update_engine or UpdateEngine(spark, fourstore_graphs=True)
         self.host = host
         self.port = port
         self.graph_access_control = graph_access_control
@@ -257,23 +271,18 @@ class SparqlHttpServer:
         self._thread: threading.Thread | None = None
         # queries against the live store must see updates, BUT rebuilding
         # a SparqlEngine per request throws away its compiled-plan cache
-        # (the whole point of fs_query_cache): cache ONE engine per quads
-        # snapshot — updates swap ue.quads to a new DataFrame object,
-        # which invalidates this by identity
-        self._engine_for: object | None = None
-        self._engine: SparqlEngine | None = None
-        # data-driven ACL mode: the AclInfo image and the per-deny-set
-        # engine cache are keyed on the quads snapshot identity — every
-        # write swaps ue.quads, which is exactly the reference's
-        # fsp_acl_needs_reload trigger (query-cache.c:242-243). Engines
-        # are cached per denied-graph set so users sharing a visibility
-        # class share one compiled-plan cache.
-        self._acl_info_for: object | None = None
+        # (the whole point of fs_query_cache): ONE engine per (quads
+        # snapshot, visibility), so keys sharing a visibility share a
+        # plan cache. Updates swap ue.quads to a new DataFrame object,
+        # which drops the engines and the data-driven AclInfo image by
+        # identity — the reference's fsp_acl_needs_reload trigger
+        # (query-cache.c:242-243).
+        self._snapshot_of: object | None = None
         self._acl_info: AclInfo | None = None
         from collections import OrderedDict
 
-        self._acl_engines: "OrderedDict" = OrderedDict()
-        self._acl_lock = threading.Lock()
+        self._engines: "OrderedDict" = OrderedDict()
+        self._lock = threading.Lock()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -309,53 +318,6 @@ class SparqlHttpServer:
                     self.send_header("Access-Control-Allow-Headers", want)
                 self.send_header("Content-Length", "0")
                 self.end_headers()
-
-            def _acl_engine(self, params: dict):
-                """Engine for this request, apikey-filtered when graph
-                access control is on. Returns (engine, error_response)."""
-                acl = outer.graph_access_control
-                if acl is None:
-                    if outer._engine_for is not outer.ue.quads:
-                        outer._engine = SparqlEngine(
-                            outer.spark,
-                            outer.ue.quads,
-                            # 4store parity: GRAPH ?g also binds default:
-                            graph_var_includes_default=True,
-                        )
-                        outer._engine_for = outer.ue.quads
-                    return outer._engine, None
-                key = params.get("apikey")
-                if not key:
-                    # httpd.c:1157 wording (body shape = http_error:
-                    # message line + server line)
-                    return None, (
-                        403,
-                        _code_body(
-                            "403 forbidden - apikey parameter has to be "
-                            "included in request."
-                        ),
-                    )
-                if acl is True:
-                    # data-driven mode: admins see everything
-                    # (no_access_for_user returns NULL for admins,
-                    # query-cache.c:97-99); everyone else gets the
-                    # small DENY list of restricted graphs
-                    info = outer._current_acl_info()
-                    denied = (
-                        () if info.is_admin(key) else info.denied_for(key)
-                    )
-                    return outer._engine_for_denied(denied), None
-                # static dict mode: unknown key -> empty allow-list
-                # -> deny-all
-                return (
-                    SparqlEngine(
-                        outer.spark,
-                        outer.ue.quads,
-                        allowed_graphs=list(acl.get(key, [])),
-                        graph_var_includes_default=True,
-                    ),
-                    None,
-                )
 
             def _params(self) -> dict:
                 url = urllib.parse.urlparse(self.path)
@@ -401,10 +363,10 @@ class SparqlHttpServer:
                     )
                 mp = multiparams or {}
                 try:
-                    eng, err = self._acl_engine(params)
+                    vis, err = outer.visibility(params.get("apikey"))
                     if err:
-                        return self._send(err[0], err[1])
-                    res = eng.query(
+                        return self._send(403, _code_body(err))
+                    res = outer.engine(vis).query(
                         text,
                         soft_limit=limit,
                         default_graph_uri=mp.get("default-graph-uri"),
@@ -469,45 +431,23 @@ class SparqlHttpServer:
                         '<p><a href="/status/cache/">cache stats</a></p>\n'
                         '<p><a href="/test/">Execute a test query</a></p>\n',
                     )
+                if path in ("/status/size", "/status/cache"):
+                    # ADVICE r4: under graph access control these pages
+                    # must not leak store shape (predicate IRIs, counts)
+                    # to unauthenticated clients nor offer them a free
+                    # full-store scan — they need a KNOWN apikey and
+                    # report that key's visibility
+                    vis, err = outer.visibility(
+                        self._params().get("apikey"), status_page=True
+                    )
+                    if err:
+                        return self._send(403, err)
+                    eng = outer.engine(vis)
                 if path == "/status/size":
                     # http_size_report (httpd.c:959-1002): per-segment
                     # quads/models/resources; here per-predicate quads
-                    # (the store's partition unit) + totals.
-                    # ADVICE r4: under graph access control this page must
-                    # not leak predicate IRIs/counts to unauthenticated
-                    # clients (nor offer them a free full-store scan) —
-                    # require a KNOWN apikey and scope the scan to that
-                    # key's allowed graphs
-                    from pyspark.sql import functions as F
-
-                    quads = outer.ue.quads
-                    acl = outer.graph_access_control
-                    if acl is True:
-                        key = self._params().get("apikey")
-                        if not key:
-                            return self._send(
-                                403,
-                                "403 forbidden - valid apikey parameter "
-                                "has to be included in request.",
-                            )
-                        info = outer._current_acl_info()
-                        if not info.is_admin(key):
-                            denied = info.denied_for(key)
-                            if denied:
-                                quads = quads.where(
-                                    ~F.col("g").isin(list(denied))
-                                )
-                    elif acl is not None:
-                        key = self._params().get("apikey")
-                        if key not in acl:
-                            return self._send(
-                                403,
-                                "403 forbidden - valid apikey parameter "
-                                "has to be included in request.",
-                            )
-                        quads = quads.where(
-                            F.col("g").isin(list(acl[key]))
-                        )
+                    # (the store's partition unit) + totals
+                    quads = eng.quads
                     rows = quads.groupBy("p").count().orderBy("p").collect()
                     models = quads.select("g").distinct().count()
                     body = [
@@ -529,23 +469,7 @@ class SparqlHttpServer:
                     )
                 if path == "/status/cache":
                     # http_cache_report (httpd.c:882-957): RID-cache hit
-                    # stats; here the compiled-plan cache's (under ACL
-                    # mode engines are per-request, so a fresh one — all
-                    # zeros — stands in). Same apikey gate as /status/size
-                    # (ADVICE r4).
-                    acl = outer.graph_access_control
-                    key = self._params().get("apikey")
-                    if acl is not None and (
-                        not key if acl is True else key not in acl
-                    ):
-                        return self._send(
-                            403,
-                            "403 forbidden - valid apikey parameter "
-                            "has to be included in request.",
-                        )
-                    eng = outer._engine or SparqlEngine(
-                        outer.spark, outer.ue.quads
-                    )
+                    # stats; here the compiled-plan cache's
                     return self._page(
                         "SPARQL httpd server status - cache",
                         "<table border=1 cellpadding=6>\n"
@@ -621,11 +545,7 @@ class SparqlHttpServer:
                     return True
                 if params.get("apikey") in acl:
                     return False
-                self._send(
-                    403,
-                    "403 forbidden - valid apikey parameter has to be "
-                    "included in request.",
-                )
+                self._send(403, _BAD_APIKEY)
                 return True
 
             def do_POST(self):
@@ -843,38 +763,72 @@ class SparqlHttpServer:
 
         self._handler_cls = Handler
 
+    def _snapshot(self):
+        """The live quads snapshot; a new one drops the engines and the
+        AclInfo built on the last. Caller holds ``_lock``."""
+        quads = self.ue.quads
+        if self._snapshot_of is not quads:
+            self._snapshot_of = quads
+            self._engines.clear()
+            self._acl_info = None
+        return quads
+
     def _current_acl_info(self) -> AclInfo:
-        """AclInfo for the live quads snapshot. Every write swaps
-        ue.quads to a new DataFrame, which is this cache's reload
-        trigger — the same contract as fsp_acl_needs_reload /
-        fs_acl_load_system_info (query-cache.c:242-243), reloading
-        strictly more often (on ANY write, not just system:config
-        writes), never less."""
-        with self._acl_lock:
-            if self._acl_info_for is not self.ue.quads:
-                self._acl_info = load_acl_info(self.ue.quads)
-                self._acl_info_for = self.ue.quads
-                self._acl_engines.clear()
+        """AclInfo for the live quads snapshot: the same contract as
+        fsp_acl_needs_reload / fs_acl_load_system_info
+        (query-cache.c:242-243), reloading strictly more often (on ANY
+        write, not just system:config writes), never less."""
+        with self._lock:
+            quads = self._snapshot()
+            if self._acl_info is None:
+                self._acl_info = load_acl_info(quads)
             return self._acl_info
 
-    def _engine_for_denied(self, denied: tuple) -> SparqlEngine:
-        """One engine per (quads snapshot, denied-graph set): users in
-        the same visibility class share a compiled-plan cache, and
-        admins (empty deny set) share one unrestricted engine."""
-        with self._acl_lock:
-            eng = self._acl_engines.get(denied)
+    def visibility(self, key: str | None, status_page: bool = False):
+        """apikey -> ``(visibility, None)``, or ``(None, body)`` for a
+        403. Without graph access control every request sees
+        EVERYTHING. Data-driven mode: any key may read; admins see
+        everything (no_access_for_user returns NULL for admins,
+        query-cache.c:97-99), everyone else loses the small DENY list of
+        restricted graphs not naming them. Static dict mode: a key sees
+        its allow-list; an unknown key reads nothing, and a status page
+        refuses it."""
+        acl = self.graph_access_control
+        if acl is None:
+            return EVERYTHING, None
+        if not key:
+            return None, _BAD_APIKEY if status_page else _NO_APIKEY
+        if acl is True:
+            info = self._current_acl_info()
+            if info.is_admin(key):
+                return EVERYTHING, None
+            return ("deny", info.denied_for(key)), None
+        if key in acl:
+            return ("allow", tuple(acl[key])), None
+        return (None, _BAD_APIKEY) if status_page else (("allow", ()), None)
+
+    def engine(self, visibility: tuple) -> SparqlEngine:
+        """The one SparqlEngine per (quads snapshot, visibility). Served
+        engines carry no store statistics: every write would invalidate
+        them."""
+        with self._lock:
+            quads = self._snapshot()
+            eng = self._engines.get(visibility)
             if eng is None:
+                kind, graphs = visibility
                 eng = SparqlEngine(
                     self.spark,
-                    self.ue.quads,
-                    denied_graphs=list(denied) or None,
+                    quads,
+                    allowed_graphs=list(graphs) if kind == "allow" else None,
+                    denied_graphs=list(graphs) if kind == "deny" else None,
+                    # 4store parity: GRAPH ?g also binds default:
                     graph_var_includes_default=True,
                 )
-                self._acl_engines[denied] = eng
-                # bounded: distinct deny sets are few (one per ACL
+                self._engines[visibility] = eng
+                # bounded: distinct visibilities are few (one per ACL
                 # class), but a hostile key stream shouldn't grow this
-                while len(self._acl_engines) > 32:
-                    self._acl_engines.popitem(last=False)
+                while len(self._engines) > 32:
+                    self._engines.popitem(last=False)
             return eng
 
     def start(self) -> None:

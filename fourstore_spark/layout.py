@@ -1,5 +1,5 @@
 """Written layout: how the quad store, the MinHash-LSH, IVF and BM25
-indexes, the sketch store and the CLI's store rebuild write, describe
+indexes, the sketch store and the whole-store replace write, describe
 and replace their parquet directories. The reference keeps one storage
 layer for its index files and updates them in place (src/backend/
 ptree.c); parquet is immutable, so here every layout shares these three

@@ -8,11 +8,13 @@ src/frontend/results.c:2598) — Spark's actions are the pull model.
 
 from __future__ import annotations
 
+import dataclasses
 import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fourstore_spark import store
 from fourstore_spark.sparql.parser import parse_query
 from fourstore_spark.sparql.translator import Translator
 
@@ -217,12 +219,13 @@ class SparqlEngine:
         soft_limit: int | None = None,
         allowed_graphs: list[str] | None = None,
         denied_graphs: list[str] | None = None,
-        single_valued_preds: set[str] | None = None,
-        pred_stats: dict | None = None,
-        pred_numeric_dt: dict | None = None,
+        stats: store.StoreStats | None = None,
         graph_var_includes_default: bool = False,
     ):
+        """``stats``: the store's planner statistics (``store.read_stats``,
+        as ``from_store`` passes them); None plans without any."""
         self.spark = spark
+        stats = stats if stats is not None else store.StoreStats()
         # graph ACLs (query-cache.c:96-140 no_access_for_user /
         # fs_mark_discard_rows): a per-session visibility filter injected
         # ahead of every scan — Catalyst pushes it into the parquet read
@@ -230,26 +233,20 @@ class SparqlEngine:
             quads = quads.where(~F.col("g").isin(denied_graphs))
         if allowed_graphs is not None:
             quads = quads.where(F.col("g").isin(allowed_graphs))
+        if denied_graphs or allowed_graphs is not None:
+            # the property table holds every graph's values and does not
+            # express the per-value graph check cheaply: filtered engines
+            # plan stars on the quads. `is not None`: an EMPTY allow-list
+            # means deny-all and must not reach the unfiltered table.
+            stats = dataclasses.replace(stats, subjects=None, pred_columns=None)
         self.quads = quads
+        self.stats = stats
         self.union_default_graph = union_default_graph
         self.graph_var_includes_default = graph_var_includes_default
         # restricted mode: per-pattern result cap (soft limit,
         # params.h.in:34 default 998/segment; truncation warning
         # results.c:2722-2728). None = exact results.
         self.soft_limit = soft_limit
-        # store statistics (manifest single_valued_preds): predicates with
-        # fan-out 1 let star scans aggregate with codegen first()
-        self.single_valued_preds = single_valued_preds
-        # per-predicate cardinalities (manifest pred_stats): drive
-        # planner-side F.broadcast() hints on small scans/stars
-        self.pred_stats = pred_stats
-        # predicate -> proven-uniform numeric datatype (manifest): lets
-        # SUM/AVG take the slim fixed-datatype path
-        self.pred_numeric_dt = pred_numeric_dt
-        # property table (store._subjects): shuffle-free star scans;
-        # subjects_cols maps predicate URI -> physical parquet column
-        self.subjects: DataFrame | None = None
-        self.subjects_cols: dict | None = None
         # bounded LRU: each entry pins a DataFrame lineage (~0.5 s to
         # rebuild), so an unbounded dict is a slow driver-memory leak for
         # a long-lived server issuing many unique query texts
@@ -282,35 +279,23 @@ class SparqlEngine:
 
     @classmethod
     def from_store(cls, spark: SparkSession, path: str, **kwargs) -> "SparqlEngine":
-        """Open a materialized quad store (store.write_store), picking up
-        its manifest statistics and property table."""
-        from fourstore_spark.store import read_manifest, read_store, read_subjects
-
-        manifest = read_manifest(path) or {}
-        sv = set(manifest.get("single_valued_preds") or []) or None
-        eng = cls(
+        """Open a materialized quad store (store.write_store) with its
+        planner statistics and property table."""
+        return cls(
             spark,
-            read_store(spark, path),
-            single_valued_preds=sv,
-            pred_stats=manifest.get("pred_stats") or None,
-            pred_numeric_dt=manifest.get("pred_numeric_dt") or None,
+            store.read_store(spark, path),
+            stats=store.read_stats(spark, path),
             **kwargs,
         )
-        if (
-            kwargs.get("allowed_graphs") is None
-            and kwargs.get("denied_graphs") is None
-            and manifest.get("pred_columns")
-            and not manifest.get("subjects_stale")
-        ):
-            # (ACL filtering needs per-value graph checks the property
-            # table doesn't express cheaply — fall back to the quads path.
-            # `is None`, not falsy: an EMPTY allow-list means deny-all and
-            # must also disable the unfiltered property-table fast path.
-            # subjects_stale: append_quads ran without a property-table
-            # rebuild — the quads dirs are current, _subjects is not.)
-            eng.subjects = read_subjects(spark, path)
-            eng.subjects_cols = manifest["pred_columns"]
-        return eng
+
+    # views of the one statistics value
+    @property
+    def subjects(self) -> DataFrame | None:
+        return self.stats.subjects
+
+    @property
+    def pred_stats(self) -> dict:
+        return self.stats.pred_stats
 
     def query(
         self,
@@ -357,11 +342,7 @@ class SparqlEngine:
             self.quads,
             self.union_default_graph,
             soft_limit=limit,
-            single_valued_preds=self.single_valued_preds,
-            subjects=self.subjects,
-            pred_stats=self.pred_stats,
-            subjects_cols=self.subjects_cols,
-            pred_numeric_dt=self.pred_numeric_dt,
+            stats=self.stats,
             graph_var_includes_default=self.graph_var_includes_default,
         )
         # raise the analyzer iteration cap for the duration of THIS

@@ -69,6 +69,11 @@ from fourstore_spark.sparql.expr import (
     null_term,
 )
 from fourstore_spark.model import XSD_INTEGER
+from fourstore_spark.store import StoreStats
+
+# a side the store statistics estimate at or below this many rows is
+# broadcast in a join (see _compat_join)
+BROADCAST_ROWS = 200_000
 
 # SERVICE (federated query) driver guards: queries longer than the GET
 # limit ship as protocol §2.1.2 POST; the remote answer is driver-
@@ -204,46 +209,30 @@ class Translator:
         quads: DataFrame,
         union_default_graph: bool = True,
         soft_limit: int | None = None,
-        single_valued_preds: set | None = None,
-        subjects: DataFrame | None = None,
-        pred_stats: dict | None = None,
-        broadcast_rows: int = 200_000,
-        subjects_cols: dict | None = None,
-        pred_numeric_dt: dict | None = None,
+        stats: StoreStats | None = None,
         graph_var_includes_default: bool = False,
     ):
         self.spark = spark
         self.quads = quads
-        # property table (store.py): quads pre-grouped by subject, used by
-        # star scans to skip the query-time shuffle entirely
-        self.subjects = subjects
-        # predicate URI -> physical column in the wide property table
-        self.subjects_cols = subjects_cols
-        # store stats: predicates known to have fan-out 1 per subject
-        # (manifest, store.write_store) — the reference's histogram
-        # analogue (fs_bind_freq, optimiser.c:445-524)
-        self.single_valued_preds = single_valued_preds or set()
+        # the store's planner statistics (store.read_stats; the
+        # reference's fs_bind_freq histograms, optimiser.c:445-524):
+        # pred_stats give leaf scans est_rows and _compat_join its
+        # F.broadcast() hints, so dimension joins never degrade to a
+        # shuffle on Spark's post-filter size guesses (which at 100x data
+        # blow past any autoBroadcastJoinThreshold); single_valued_preds
+        # let stars aggregate with codegen first(); pred_numeric_dt puts
+        # SUM/AVG on the slim fixed-datatype path (2 aggregate buffers
+        # instead of 6), bit-identical by the stats guarantee
+        # (store._numeric_dt_stats); the property table lets star scans
+        # skip the query-time shuffle entirely
+        self.stats = stats if stats is not None else StoreStats()
         # 4store's default graph is effectively the union of all models
         # unless restricted (FS_QUERY_DEFAULT_GRAPH,
         # src/backend/query-backend.c:71-80)
         self.union_default_graph = union_default_graph
+        self.graph_var_includes_default = graph_var_includes_default
         # per-pattern result cap (soft limit / restricted mode,
         # params.h.in:34, query-datatypes.c:998-1015)
-        # per-predicate (quads, distinct-subjects) counts from the store
-        # manifest; leaf scans get est_rows, and _compat_join emits
-        # F.broadcast() hints for estimated-small sides so dimension joins
-        # never degrade to a shuffle on Spark's post-filter size guesses
-        # (which at 100x data blow past any autoBroadcastJoinThreshold)
-        self.pred_stats = pred_stats or {}
-        self.graph_var_includes_default = graph_var_includes_default
-        # predicate -> store-proven uniform numeric datatype with all
-        # values exactly DECIMAL(38,6)-representable: SUM/AVG over a
-        # variable bound from such a predicate take the slim fixed-dt
-        # path (2 aggregate buffers instead of 6, no per-row promotion/
-        # representability machinery) — bit-identical results by the
-        # stats guarantee (store._numeric_dt_stats)
-        self.pred_numeric_dt = pred_numeric_dt or {}
-        self.broadcast_rows = broadcast_rows
         self.soft_limit = soft_limit
         # pre-cap pattern DataFrames, kept so the engine can check lazily
         # whether a cap actually truncated (the reference warns only then:
@@ -687,9 +676,10 @@ class Translator:
         est = None
         vp = None
         if isinstance(tp.p, A.Iri):
-            if tp.p.value in self.pred_stats:
-                est = self.pred_stats[tp.p.value][0]  # quad count upper bound
-            elif self.pred_stats:
+            pred_stats = self.stats.pred_stats
+            if tp.p.value in pred_stats:
+                est = pred_stats[tp.p.value][0]  # quad count upper bound
+            elif pred_stats:
                 # stats cover every predicate in the store (write_store /
                 # append_quads maintain them) — an absent predicate is a
                 # provably-empty scan: est 0 short-circuits join planning
@@ -1118,11 +1108,11 @@ class Translator:
         store guarantees by deduplicating at import like the reference's
         import-backend.c:74-118)."""
         if (
-            self.subjects is not None
-            and self.subjects_cols is not None
+            self.stats.subjects is not None
+            and self.stats.pred_columns is not None
             and not isinstance(graph, A.Var)
             and self.soft_limit is None
-            and all(tp.p.value in self.subjects_cols for tp, _ in patterns)
+            and all(tp.p.value in self.stats.pred_columns for tp, _ in patterns)
         ):
             return self._star_scan_pt(sname, patterns, graph)
         df = self._graph_filter(self.quads, graph)
@@ -1155,7 +1145,7 @@ class Translator:
                 name = f"__c{i}"
                 aggs.append(F.max(F.when(m, 1)).alias(name))
                 requires.append(name)
-            elif tp.p.value in self.single_valued_preds:
+            elif tp.p.value in self.stats.single_valued_preds:
                 # store stats say fan-out <= 1: a codegen-friendly first()
                 # replaces collect_list+explode (HashAggregate instead of
                 # ObjectHashAggregate, no Generate node)
@@ -1204,7 +1194,7 @@ class Translator:
         predicates are decoded) + array filters per subject row, arrays
         exploded back (or element_at for store-stat functional
         predicates)."""
-        df = self.subjects
+        df = self.stats.subjects
 
         def graph_vals(vals: Column) -> Column:
             if isinstance(graph, A.Iri):
@@ -1242,7 +1232,7 @@ class Translator:
 
         from pyspark.sql.types import ArrayType
 
-        col_type = {f.name: f.dataType for f in self.subjects.schema.fields}
+        col_type = {f.name: f.dataType for f in df.schema.fields}
 
         # as in _star_scan: object terms land in internal __-prefixed
         # columns and only alias to the variable name at the end — a
@@ -1252,7 +1242,7 @@ class Translator:
         explodes: list[tuple[str, str]] = []
         ovars: list[tuple[str, str]] = []  # (internal col, variable name)
         for i, (tp, oname) in enumerate(patterns):
-            cname = self.subjects_cols[tp.p.value]
+            cname = self.stats.pred_columns[tp.p.value]
             if isinstance(tp.o, A.Iri):
                 match = lambda x, t=tp: (x["kind"] == KIND_URI) & (
                     x["lex"] == t.o.value
@@ -1295,7 +1285,7 @@ class Translator:
                 )
                 continue
             df = df.where(vals.isNotNull() & (F.size(vals) > 0))
-            if tp.p.value in self.single_valued_preds:
+            if tp.p.value in self.stats.single_valued_preds:
                 df = df.withColumn(f"__o{i}", term_of(F.element_at(vals, 1)))
             else:
                 name = f"__pv{i}"
@@ -1327,14 +1317,18 @@ class Translator:
         star's predicates <= min per-predicate distinct-subject count.
         Multi-valued predicates can explode rows beyond the subject count,
         so only functional (single-valued) stars get an estimate."""
-        if not self.pred_stats:
+        pred_stats = self.stats.pred_stats
+        if not pred_stats:
             return None
         est = None
         for tp, oname in patterns:
-            stats = self.pred_stats.get(tp.p.value)
+            stats = pred_stats.get(tp.p.value)
             if stats is None:
                 return 0  # absent predicate: the star matches nothing
-            if oname is not None and tp.p.value not in self.single_valued_preds:
+            if (
+                oname is not None
+                and tp.p.value not in self.stats.single_valued_preds
+            ):
                 return None
             est = stats[1] if est is None else min(est, stats[1])
         return est
@@ -1406,14 +1400,14 @@ class Translator:
         # dimension join to a shuffle). Only the build-able side of outer/
         # semi/anti joins is eligible.
         l_est, r_est = left.est_rows, right.est_rows
-        r_small = r_est is not None and r_est <= self.broadcast_rows
-        l_small = l_est is not None and l_est <= self.broadcast_rows
+        r_small = r_est is not None and r_est <= BROADCAST_ROWS
+        l_small = l_est is not None and l_est <= BROADCAST_ROWS
         if r_small and not (how == "inner" and l_small and l_est < r_est):
             rdf = F.broadcast(rdf)
         elif l_small and how == "inner":
             ldf = F.broadcast(ldf)
-        elif (r_est is not None and r_est > self.broadcast_rows) or (
-            l_est is not None and l_est > self.broadcast_rows
+        elif (r_est is not None and r_est > BROADCAST_ROWS) or (
+            l_est is not None and l_est > BROADCAST_ROWS
         ):
             # the inverse guard: no side is provably small, and at least
             # one is provably BIG. Spark's planner compares the build
@@ -1975,9 +1969,9 @@ class Translator:
 
         # store-proven uniform numeric datatypes for scan-provenanced vars
         var_dt: dict = {}
-        if self.pred_numeric_dt and sol.var_pred:
+        if self.stats.pred_numeric_dt and sol.var_pred:
             for v, p in sol.var_pred.items():
-                known = self.pred_numeric_dt.get(p)
+                known = self.stats.pred_numeric_dt.get(p)
                 if known:
                     var_dt[v] = known
 

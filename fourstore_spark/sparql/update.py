@@ -134,17 +134,19 @@ class UpdateEngine:
         quads: DataFrame | None = None,
         union_default_graph: bool = True,
         load_fn=None,
-        wildcard_delete: bool = False,
+        fourstore_graphs: bool = False,
     ):
-        """``wildcard_delete`` switches un-GRAPHed DELETE templates (no
-        GRAPH in the data block, no WITH) to the reference's semantics:
-        the triple is removed from EVERY graph (update.c:127 wildcard
-        model). Default False = SPARQL 1.1 (default graph only); the
-        HTTP server — the 4store-parity surface — turns it on."""
+        """``fourstore_graphs`` switches updates to the reference's graph
+        semantics: an un-GRAPHed DELETE template (no GRAPH in the data
+        block, no WITH) removes the triple from EVERY graph (update.c:127
+        wildcard model), and ``GRAPH ?g`` in a WHERE clause also binds
+        the default graph, as the server's queries do. Default False =
+        SPARQL 1.1; the HTTP server — the 4store-parity surface — turns
+        it on."""
         self.spark = spark
         self._quads = quads if quads is not None else empty_quads(spark)
         self.union_default_graph = union_default_graph
-        self.wildcard_delete = wildcard_delete
+        self.fourstore_graphs = fourstore_graphs
         self._bnode_seq = 0
         # LOAD resolver: uri -> quads DataFrame; default reads local files
         self._load_fn = load_fn or self._default_load
@@ -318,25 +320,22 @@ class UpdateEngine:
         return _txn()
 
     def save(self, path: str) -> None:
-        """Dump the store as parquet (dump.c parity; see also
-        sources.rdfio.quads_to_nq_lines for the N-Quads dump)."""
-        self.quads.write.mode("overwrite").parquet(path)
+        """Write the store to ``path`` (dump.c parity; see also
+        sources.rdfio.quads_to_nq_lines for the N-Quads dump) through
+        ``store.replace_store``, then continue on the saved store — so
+        saving onto the store this engine was restored from is safe."""
+        from fourstore_spark import store
+
+        store.replace_store(self.quads, path)
+        self.quads = store.read_store(self.spark, path)
 
     @classmethod
-    def restore(cls, spark: SparkSession, path: str) -> "UpdateEngine":
-        """Reopen a saved store. A manifest-bearing store directory goes
-        through store.read_store — which, unlike a raw parquet read,
-        returns an empty QUADS_SCHEMA frame for a store with zero
-        predicate dirs (a reachable state after CLEAR ALL / delete-model
-        --all; raw spark.read.parquet fails schema inference there).
-        Plain parquet dumps (save()) keep the direct read."""
-        import os
+    def restore(cls, spark: SparkSession, path: str, **options) -> "UpdateEngine":
+        """Reopen a saved store (``store.read_store``); ``options`` are
+        the constructor's."""
+        from fourstore_spark import store
 
-        from fourstore_spark.store import MANIFEST, read_store
-
-        if os.path.exists(os.path.join(path, MANIFEST)):
-            return cls(spark, read_store(spark, path))
-        return cls(spark, spark.read.parquet(path))
+        return cls(spark, store.read_store(spark, path), **options)
 
     # ------------------------------------------------------------ ops
     def _apply(self, store: DataFrame, op) -> DataFrame:
@@ -344,9 +343,10 @@ class UpdateEngine:
         (INSERT DATA, LOAD, CREATE) are handled inline in :meth:`update`
         so their deltas feed the O(delta) commit tracking."""
         if isinstance(op, A.DeleteDataOp):
-            bare_g = WILDCARD_GRAPH if self.wildcard_delete else DEFAULT_GRAPH
+            wild = self._wildcard(op.quads)
+            bare_g = WILDCARD_GRAPH if wild else DEFAULT_GRAPH
             return self._minus_split(
-                store, self._const_quads(op.quads, bare_g=bare_g)
+                store, self._const_quads(op.quads, bare_g=bare_g), wild
             )
         if isinstance(op, A.ModifyOp):
             return self._modify(store, op)
@@ -363,10 +363,21 @@ class UpdateEngine:
         return load_rdf(self.spark, path, graph)
 
     # ---- constant quad blocks (insert_rasqal_triple, update.c:117-156)
-    def _minus_split(self, store: DataFrame, removed: DataFrame) -> DataFrame:
-        """quads_minus, routing WILDCARD_GRAPH rows through the
-        any-graph triple delete (reference wildcard model)."""
-        if not self.wildcard_delete:
+    def _wildcard(self, quads: list) -> bool:
+        """Whether a delete block takes the reference's wildcard model:
+        4store graph semantics and at least one quad without a graph."""
+        return self.fourstore_graphs and any(
+            not isinstance(q.g, (A.Iri, A.Var)) for q in quads
+        )
+
+    def _minus_split(
+        self, store: DataFrame, removed: DataFrame, wildcard: bool
+    ) -> DataFrame:
+        """quads_minus; with ``wildcard``, WILDCARD_GRAPH rows go through
+        the any-graph triple delete (reference wildcard model). A delete
+        without such rows skips that anti-join, which would add a join
+        and a shuffle to its plan."""
+        if not wildcard:
             return quads_minus(store, removed)
         store = quads_minus_any_graph(
             store, removed.where(F.col("g") == WILDCARD_GRAPH)
@@ -396,18 +407,23 @@ class UpdateEngine:
 
     # ---- DELETE/INSERT WHERE (update.c:277-381)
     def _modify(self, store: DataFrame, op: A.ModifyOp) -> DataFrame:
-        tr = Translator(self.spark, store, self.union_default_graph)
+        tr = Translator(
+            self.spark,
+            store,
+            self.union_default_graph,
+            graph_var_includes_default=self.fourstore_graphs,
+        )
         tr.from_graphs = list(op.using)
         tr.from_named = list(op.using_named)
         graph_ctx = A.Iri(op.with_graph) if op.with_graph and not op.using else None
         sol = tr.translate(op.where, graph=graph_ctx)
         default_g = op.with_graph or DEFAULT_GRAPH
         if op.delete:
-            del_g = default_g
-            if self.wildcard_delete and not op.with_graph:
-                del_g = WILDCARD_GRAPH  # un-GRAPHed template, no WITH
+            # an un-GRAPHed template without WITH deletes from every graph
+            wild = not op.with_graph and self._wildcard(op.delete)
+            del_g = WILDCARD_GRAPH if wild else default_g
             deletes = self._instantiate(op.delete, sol, del_g, bnodes_error=True)
-            store = self._minus_split(store, deletes)
+            store = self._minus_split(store, deletes, wild)
         if op.insert:
             inserts = self._instantiate(op.insert, sol, default_g, bnodes_error=False)
             store = quads_add(store, inserts)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import urllib.parse
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -484,7 +485,64 @@ def compact_store(
     return manifest
 
 
+def replace_store(quads: DataFrame, path: str) -> dict:
+    """The one whole-store write: ``write_store`` into a staging
+    directory beside ``path``, then ``layout.replace`` swaps it in. A
+    store can't be overwritten in place while its own parquet files feed
+    ``quads``' plan, and a crash leaves the old or the new store whole.
+    Returns the new manifest."""
+    staged = layout.staging(path)
+    manifest = write_store(quads, staged)
+    layout.replace(path, staged)
+    return manifest
+
+
+@dataclass(frozen=True)
+class StoreStats:
+    """What the planner knows about a store, read once from its manifest
+    (the backend frequency statistics 4store's optimiser binds,
+    fs_bind_freq optimiser.c:445-524). An engine over plain quads gets
+    the empty value: no hints, no property table.
+
+    - ``pred_stats``: predicate -> [quads, distinct subjects];
+    - ``single_valued_preds``: predicates with fan-out 1 per subject;
+    - ``pred_numeric_dt``: predicate -> its proven-uniform numeric
+      datatype (slim SUM/AVG);
+    - ``subjects`` / ``pred_columns``: the property table and predicate
+      -> its physical column, both None while the table is stale
+      (``append_quads`` without a rebuild) or absent."""
+
+    pred_stats: dict = field(default_factory=dict)
+    single_valued_preds: frozenset = frozenset()
+    pred_numeric_dt: dict = field(default_factory=dict)
+    subjects: DataFrame | None = None
+    pred_columns: dict | None = None
+
+
+def read_stats(spark: SparkSession, path: str) -> StoreStats:
+    """The store's planner statistics; empty for a plain parquet
+    directory of quads."""
+    manifest = read_manifest(path) or {}
+    sub = os.path.join(path, "_subjects")
+    subjects = None
+    if (
+        manifest.get("pred_columns")
+        and not manifest.get("subjects_stale")
+        and os.path.isdir(sub)
+    ):
+        subjects = spark.read.parquet(sub)
+    return StoreStats(
+        pred_stats=manifest.get("pred_stats") or {},
+        single_valued_preds=frozenset(manifest.get("single_valued_preds") or ()),
+        pred_numeric_dt=manifest.get("pred_numeric_dt") or {},
+        subjects=subjects,
+        pred_columns=manifest["pred_columns"] if subjects is not None else None,
+    )
+
+
 def read_store(spark: SparkSession, path: str) -> DataFrame:
+    """The store's quads: a manifest store or a plain parquet directory
+    of quads."""
     # an empty store (e.g. after CLEAR ALL) has a manifest but no
     # predicate dirs: parquet schema inference would fail — hand back an
     # empty frame on the quads schema instead
@@ -493,14 +551,6 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
 
         return spark.createDataFrame([], QUADS_SCHEMA)
     return spark.read.parquet(path)
-
-
-def read_subjects(spark: SparkSession, path: str) -> DataFrame | None:
-    """The store's property table, if materialized."""
-    sub = os.path.join(path, "_subjects")
-    if not os.path.isdir(sub):
-        return None
-    return spark.read.parquet(sub)
 
 
 def read_manifest(path: str) -> dict | None:
