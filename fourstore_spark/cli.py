@@ -135,7 +135,8 @@ def main(argv: list[str] | None = None) -> int:
 
     rst = sub.add_parser(
         "restore",
-        help="rebuild a store from N-Quads dump file(s) (== 4s-restore)",
+        help="rebuild a store from dump file(s) in any RDF syntax "
+             "load_rdf reads (== 4s-restore)",
     )
     rst.add_argument("store")
     rst.add_argument("dumps", nargs="+")
@@ -272,12 +273,7 @@ def main(argv: list[str] | None = None) -> int:
         text = sys.stdin.read() if args.query == "-" else args.query
         eng = SparqlEngine.from_store(spark, args.store)
         res = eng.query(text, soft_limit=args.soft_limit)
-        fmt = args.format
-        if res.form in ("CONSTRUCT", "DESCRIBE") and fmt not in (
-            "turtle", "rdfxml", "testcase"
-        ):
-            fmt = "ntriples"
-        sys.stdout.write(res.serialize(fmt))
+        sys.stdout.write(res.serialize(res.output_format(args.format)))
         return 0
 
     if args.cmd == "import":
@@ -353,24 +349,17 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "restore":
         # 4s-restore (src/utilities/4s-restore): rebuild a store from
-        # N-Quads dump files (graph terms preserved); .trix/.xml dumps
-        # route through the TriX reader (== 4s-restore-trix,
+        # dump files (graph terms preserved), each read by load_rdf, so
+        # TriX dumps go through the TriX reader (== 4s-restore-trix,
         # src/frontend/restore-trix.c)
-        from fourstore_spark.sources.rdfio import (
-            load_rdf,
-            quads_from_nt,
-            report_skips,
-        )
+        from fourstore_spark.sources.rdfio import load_rdf, report_skips
         from fourstore_spark.sparql.update import empty_quads, quads_add
         from fourstore_spark.store import replace_store
 
         quads = empty_quads(spark)
         loaded = []
         for f in args.dumps:
-            if f.lower().endswith((".trix", ".xml")):
-                df = load_rdf(spark, f)
-            else:
-                df = quads_from_nt(spark, f)
+            df = load_rdf(spark, f)
             loaded.append((f, df))
             quads = quads_add(quads, df)
         replace_store(quads, args.store)

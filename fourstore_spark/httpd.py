@@ -13,7 +13,8 @@ Mirrors the reference's httpd surface (/root/reference/src/http/httpd.c):
   carries ``Access-Control-Allow-Origin: *`` when the request has an
   Origin header (IS_CORS, httpd.c:56)
 - ``PUT /data/<graph-uri>`` — replace graph with request body
-  (N-Triples/Turtle; httpd.c:687-753)
+  (N-Triples/N-Quads, Turtle, TriG, RDF/XML or TriX, chosen by
+  ``sources.rdfio.rdf_syntax``; httpd.c:687-753)
 - ``POST /data/`` — append body to graph given by ``graph`` param
   (httpd.c:755-810)
 - ``DELETE /data/<graph-uri>`` — drop graph
@@ -46,7 +47,12 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from fourstore_spark.model import check_iri
-from fourstore_spark.sparql.engine import SparqlEngine
+from fourstore_spark.sources.rdfio import (
+    RDF_SYNTAXES,
+    quads_from_text,
+    rdf_syntax,
+)
+from fourstore_spark.sparql.engine import GRAPH_FORMATS, SparqlEngine
 from fourstore_spark.sparql.update import UpdateEngine
 
 # Version tail line on write-op responses (http_code, httpd.c:291-302:
@@ -181,15 +187,15 @@ def _with_default_base(text: str) -> str:
     return "BASE <local:local>\n" + text
 
 
+# result format -> media type; graph formats take the first media type
+# of their syntax in rdfio's table
 _CONTENT_TYPES = {
     "text": "text/plain",
     "json": "application/sparql-results+json",
     "xml": "application/sparql-results+xml",
     "csv": "text/csv",
     "tsv": "text/tab-separated-values",
-    "ntriples": "application/n-triples",
-    "rdfxml": "application/rdf+xml",
-    "turtle": "text/turtle",
+    **{fmt: RDF_SYNTAXES[fmt][0][0] for fmt in GRAPH_FORMATS},
 }
 
 # Accept-header media type -> result format (SPARQL protocol content
@@ -202,9 +208,7 @@ _ACCEPT_FORMATS = {
     "application/xml": "xml",
     "text/csv": "csv",
     "text/tab-separated-values": "tsv",
-    "application/n-triples": "ntriples",
-    "application/rdf+xml": "rdfxml",
-    "text/turtle": "turtle",
+    **{RDF_SYNTAXES[fmt][0][0]: fmt for fmt in GRAPH_FORMATS},
 }
 
 
@@ -387,10 +391,7 @@ class SparqlHttpServer:
                             res.df, base=bm.group(1) if bm else None
                         )
                     else:
-                        if res.form in (
-                            "CONSTRUCT", "DESCRIBE"
-                        ) and fmt not in ("rdfxml", "turtle"):
-                            fmt = "ntriples"
+                        fmt = res.output_format(fmt)
                         body = res.serialize(fmt)
                 except Exception as exc:  # noqa: BLE001 — 4xx per httpd.c
                     return self._send(400, f"parser error: {exc}")
@@ -499,7 +500,7 @@ class SparqlHttpServer:
                         f"{fmts}\n"
                         "  sd:endpoint </sparql/> .\n"
                     )
-                    return self._send(200, desc, "text/turtle")
+                    return self._send(200, desc, _CONTENT_TYPES["turtle"])
                 if path == "/test":
                     # http_query_widget (httpd.c:1070-1100)
                     opts = "\n".join(
@@ -593,74 +594,17 @@ class SparqlHttpServer:
                     )
                 self._send(404, "not found")
 
-            def _parse_rdf_body(self, body: str, graph: str,
-                                ct: str | None = None):
-                """Content-Type-driven parse (http_put_data /
-                http_post_data, httpd.c: picks the raptor parser from the
-                media type), falling back to the reference's other
-                convention — sniffing the GRAPH URI's file extension —
-                then to try-NT-then-Turtle."""
-                from fourstore_spark.sources.rdfio import (
-                    quads_from_nt_text,
-                    quads_from_rdfxml,
-                    quads_from_trig,
-                    quads_from_turtle,
-                )
-
-                ct = (
-                    ct or self.headers.get("Content-Type") or ""
-                ).split(";")[0].strip().lower()
-                generic = ct in ("", "application/octet-stream")
-                # raptor scores the GRAPH URI's file suffix above a
-                # generic media type: text/plain registers on the
-                # ntriples parser with a LOW quality, so a .ttl
-                # identifier wins and the body parses as Turtle
-                # (raptor_new_parser_for_content; the reference's
-                # describe script PUTs Turtle comma-lists as text/plain
-                # under <...test.ttl> and the exemplar shows them
-                # imported)
-                weak = generic or ct == "text/plain"
-                g = graph.lower()
-                if ct == "application/rdf+xml" or (
-                    weak and g.endswith((".rdf", ".xrdf", ".owl", ".xml"))
-                ):
-                    return quads_from_rdfxml(
-                        outer.spark, body, graph, base=graph
-                    )
-                if ct == "application/trig" or (
-                    weak and g.endswith(".trig")
-                ):
-                    return quads_from_trig(outer.spark, body, graph)
-                if ct in ("text/turtle", "application/x-turtle") or (
-                    weak and g.endswith((".ttl", ".turtle"))
-                ):
-                    return quads_from_turtle(
-                        outer.spark, body, graph, base=graph
-                    )
-                if ct in (
-                    "application/n-triples",
-                    "application/n-quads",
-                    "text/plain",
-                ) or (generic and g.endswith((".nt", ".nq"))):
-                    return quads_from_nt_text(outer.spark, body, graph)
-                # unknown/absent type: sniff like raptor's guess parser
-                # (the reference's test PUTs send an EMPTY Content-Type
-                # for swh.xrdf and rely on the guess, import.c)
-                if body.lstrip().startswith(("<?xml", "<rdf:RDF", "<!--")):
-                    return quads_from_rdfxml(
-                        outer.spark, body, graph, base=graph
-                    )
-                try:  # then NT, then Turtle
-                    return quads_from_nt_text(outer.spark, body, graph)
-                except ValueError:
-                    return quads_from_turtle(
-                        outer.spark, body, graph, base=graph
-                    )
-
             def _load(self, graph: str, body: str, replace: bool,
                       ct: str | None = None):
                 try:
-                    quads = self._parse_rdf_body(body, graph, ct=ct)
+                    # http_put_data / http_post_data (httpd.c) pick the
+                    # raptor parser from the media type, else the GRAPH
+                    # URI's suffix, else the body
+                    ct = ct or self.headers.get("Content-Type")
+                    quads = quads_from_text(
+                        outer.spark, body, graph,
+                        rdf_syntax(graph, ct, body), base=graph,
+                    )
                     with outer._write_lock:
                         if replace:
                             outer.ue.update(f"CLEAR SILENT GRAPH <{graph}>")

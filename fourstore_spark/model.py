@@ -81,6 +81,7 @@ CLI, the N-Quads dump), like the reference's one output dispatch
 from __future__ import annotations
 
 import re
+from urllib.parse import urljoin
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -230,6 +231,43 @@ def check_iri(iri: str) -> str:
     if _IRI_BAD_RE.search(iri):
         raise ValueError(f"IRI with a character IRIREF excludes: {iri!r}")
     return iri
+
+
+def escape_iri(text: str) -> str:
+    """``text`` with each character the IRI rule excludes percent-encoded
+    (a file path made a base IRI)."""
+    return _IRI_BAD_RE.sub(lambda m: f"%{ord(m.group()):02X}", text)
+
+
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
+
+
+def resolve_iri(base: str, ref: str) -> str:
+    """RFC 3986 resolution of ``ref`` against ``base`` ("" for none), as
+    raptor resolves every document-relative IRI. urljoin only resolves
+    schemes in urllib's uses_relative list; for other base schemes
+    (4s-httpd's default BASE <local:local>, httpd.c:1925; a PUT of
+    data/swh.xrdf under graph <graph:x> must yield <graph:swh.xrdf.asc>,
+    httpd-extras exemplars) the §5.3 merge is done by hand:
+    fragment-only keeps the whole base path (<#x> -> local:local#x),
+    query-only keeps the path (<?y> -> local:local?y), a path ref
+    replaces the base path's last segment (<A> -> local:A). urljoin
+    normalizes dot segments ("../x"); the runtime IRI() column path
+    (expr._resolve_iri_col) keeps them literal."""
+    if not base or _SCHEME_RE.match(ref):
+        return ref
+    out = urljoin(base, ref)
+    if out != ref or not _SCHEME_RE.match(base):
+        return out
+    if ref.startswith("#"):
+        return base.split("#", 1)[0] + ref
+    b = base.split("#", 1)[0].split("?", 1)[0]
+    if ref.startswith("?"):
+        return b + ref
+    scheme_end = b.index(":") + 1
+    path = b[scheme_end:]
+    cut = path.rfind("/") + 1  # 0 when no '/': drop path
+    return b[:scheme_end] + path[:cut] + ref
 
 
 def iri_ok(iri: Column) -> Column:

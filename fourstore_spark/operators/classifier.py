@@ -38,7 +38,7 @@ published pipelines above.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fourstore_spark import layout
@@ -156,12 +156,6 @@ def classifier_logits(
             F.col("logit_micro") >= F.lit(int(threshold_micro)),
         )
     )
-
-
-def sigmoid_prob(logit_micro: Column) -> Column:
-    """Display-only probability from a logit_micro column. NOT on any
-    oracle surface: libm exp() rounding may differ across engines."""
-    return 1.0 / (1.0 + F.exp(-(logit_micro / F.lit(MICRO))))
 
 
 def train_quality_classifier(

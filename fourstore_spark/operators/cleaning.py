@@ -24,20 +24,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens of trimmed text ([] for empty)."""
-    t = F.trim(F.lower(text))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+from .lm import lm_tokens
 
 
 def word_ngrams(text: Column, n: int) -> Column:
     """Distinct word n-grams (space-joined). A document shorter than n
     tokens contributes its whole token sequence as one gram, so short
     eval rows still participate in containment checks."""
-    toks = _tokens(text)
+    toks = lm_tokens(text)
     idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
     return F.when(
         F.size(toks) >= n,
@@ -103,7 +97,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     All three are single-pass array expressions over one tokenize."""
     staged = df.select(
-        "*", _tokens(F.col(text_col)).alias("__toks")
+        "*", lm_tokens(F.col(text_col)).alias("__toks")
     )
     toks = F.col("__toks")
     nw = F.size(toks)

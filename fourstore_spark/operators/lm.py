@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 
 from fourstore_spark import layout
 
+from .textstats import tokens
+
 __all__ = [
     "lm_tokens",
     "unigram_counts",
@@ -56,10 +58,7 @@ MICRO = 1_000_000.0
 
 def lm_tokens(text: Column) -> Column:
     """Lowercased whitespace tokens (empty/blank text -> empty array)."""
-    t = F.trim(F.lower(text))
-    return F.when(
-        F.length(t) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(t, r"\s+"))
+    return tokens(F.lower(text))
 
 
 def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens
+
 
 def pack_sequences(
     df: DataFrame,
@@ -104,11 +106,7 @@ def chunk_documents(
     """
     if window < 1 or stride < 1:
         raise ValueError(f"window/stride must be >= 1, got {window}/{stride}")
-    t = F.trim(F.col(text_col))
-    toks = F.when(
-        F.length(t) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(t, r"\s+"))
-    d = df.select(F.col(id_col), toks.alias("__toks"))
+    d = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
     starts = F.sequence(
         F.lit(0), F.size("__toks") - 1, F.lit(stride)
     )

@@ -68,6 +68,11 @@ class _analyzer_headroom:
         return False
 
 
+# the formats a graph result (CONSTRUCT/DESCRIBE) is written in: keys
+# of sources.rdfio.RDF_SYNTAXES
+GRAPH_FORMATS = ("nt", "turtle", "rdfxml")
+
+
 class SparqlResult:
     def __init__(self, form: str, df: DataFrame):
         self.form = form
@@ -92,6 +97,16 @@ class SparqlResult:
         return len(self.df.take(1)) > 0
 
     # -- serializers (fs_query_results_output dispatch, results.c:2900) --
+    def output_format(self, fmt: str) -> str:
+        """The format ``serialize`` is asked for when ``fmt`` is
+        requested. A graph result (CONSTRUCT/DESCRIBE) keeps a format of
+        ``GRAPH_FORMATS``, writes ``testcase`` as Turtle (the
+        reference's output_testcase, results.c:2413-2421) and anything
+        else as N-Triples; other forms keep ``fmt``."""
+        if self.form not in ("CONSTRUCT", "DESCRIBE") or fmt in GRAPH_FORMATS:
+            return fmt
+        return "turtle" if fmt == "testcase" else "nt"
+
     def serialize(self, fmt: str = "json") -> str:
         """fmt: 'json' | 'xml' | 'csv' | 'tsv' (SELECT/ASK), or
         'ntriples' (CONSTRUCT/DESCRIBE)."""

@@ -786,9 +786,9 @@ def _resolve_iri_col(lex: Column, base: str) -> Column:
     split driver-side (no UDF): scheme-carrying refs pass through;
     //authority, /absolute-path, ?query-only, #fragment-only, empty
     (same-document) and relative-path refs take the corresponding base
-    prefix — mirroring urljoin/parser.resolve_iri. Dot-segment
+    prefix — mirroring model.resolve_iri. Dot-segment
     normalization ("../", "./") is NOT applied (known divergence from
-    urljoin, documented on parser.resolve_iri too): IRI("../x") keeps
+    urljoin, documented on model.resolve_iri too): IRI("../x") keeps
     the literal segments."""
     if not base:
         return lex

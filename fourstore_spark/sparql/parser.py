@@ -18,7 +18,14 @@ from __future__ import annotations
 
 import re
 
-from fourstore_spark.model import RDF, XSD_BOOLEAN, XSD_DECIMAL, XSD_DOUBLE, XSD_INTEGER
+from fourstore_spark.model import (
+    RDF,
+    XSD_BOOLEAN,
+    XSD_DECIMAL,
+    XSD_DOUBLE,
+    XSD_INTEGER,
+    resolve_iri,
+)
 from fourstore_spark.sparql import algebra as A
 from fourstore_spark.sparql.tokenizer import SparqlSyntaxError, Token, tokenize
 
@@ -124,37 +131,7 @@ class Parser:
 
     # ------------------------------------------------------------ terms
     def resolve_iri(self, raw: str) -> str:
-        iri = raw[1:-1]
-        # BASE resolution (RFC 3986 via urljoin) for relative refs; an
-        # IRI carrying a scheme is already absolute. Known divergence
-        # from the runtime IRI() column path (expr._resolve_iri_col):
-        # urljoin normalizes dot segments ("../x"); the column version
-        # keeps them literal — same targets otherwise (query-only,
-        # fragment-only, empty, absolute-path, //authority refs).
-        if self.base and not re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", iri):
-            from urllib.parse import urljoin
-
-            out = urljoin(self.base, iri)
-            # urljoin only resolves against schemes in urllib's
-            # uses_relative list; for other schemes (e.g. 4s-httpd's
-            # default BASE <local:local>, httpd.c:1925) apply the RFC
-            # 3986 5.3 merge by hand, matching raptor: fragment-only
-            # keeps the whole base path (<#x> -> local:local#x),
-            # query-only keeps the path (<?y> -> local:local?y), a
-            # path ref replaces the base path's last segment
-            # (<A> -> local:A).
-            if out == iri:
-                if iri.startswith("#"):
-                    return self.base.split("#", 1)[0] + iri
-                b = self.base.split("#", 1)[0].split("?", 1)[0]
-                if iri.startswith("?"):
-                    return b + iri
-                scheme_end = b.index(":") + 1
-                path = b[scheme_end:]
-                cut = path.rfind("/") + 1  # 0 when no '/': drop path
-                return b[:scheme_end] + path[:cut] + iri
-            return out
-        return iri
+        return resolve_iri(self.base, raw[1:-1])
 
     def resolve_pname(self, raw: str) -> str:
         pfx, _, local = raw.partition(":")

@@ -194,21 +194,12 @@ def _build_test(props, t_iri: str) -> W3CTest:
 
 # ---------------------------------------------------------------- loading
 def _load_rdf_text(spark, iri: str, graph: str):
-    from fourstore_spark.sources.rdfio import (
-        quads_from_nt_text,
-        quads_from_rdfxml,
-        quads_from_turtle,
-    )
+    from fourstore_spark.sources.rdfio import quads_from_text, rdf_syntax
 
+    if rdf_syntax(iri) is None:
+        raise ValueError(f"unknown RDF extension on {iri!r}")
     text = _read(iri)
-    ext = iri.rsplit(".", 1)[-1].lower()
-    if ext in ("ttl", "turtle"):
-        return quads_from_turtle(spark, text, default_graph=graph)
-    if ext in ("nt", "nq"):
-        return quads_from_nt_text(spark, text, default_graph=graph)
-    if ext in ("rdf", "xml"):
-        return quads_from_rdfxml(spark, text, default_graph=graph)
-    raise ValueError(f"unknown RDF extension on {iri!r}")
+    return quads_from_text(spark, text, graph, rdf_syntax(iri, head=text))
 
 
 def _dataset(spark, data, graph_data):
