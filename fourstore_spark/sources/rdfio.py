@@ -296,11 +296,9 @@ def _turtle_parser(text: str):
 
 
 def _with_base(text: str, base: str | None) -> str:
-    """Turtle/TriG ``text`` with ``@base <base>`` prepended when it
-    carries no base of its own."""
-    if not base or _AT_BASE.search(text) or re.search(r"(?im)^\s*BASE\b", text):
-        return text
-    return f"@base <{base}> .\n" + text
+    """Turtle/TriG ``text`` parsed against ``base``: a base directive of
+    the document's own replaces it from there on (RFC 3986 §5.1)."""
+    return f"@base <{base}> .\n" + text if base else text
 
 
 def parse_turtle(text: str) -> list:
@@ -333,8 +331,8 @@ def quads_from_turtle(
 ) -> DataFrame:
     """Turtle text -> quads DataFrame (driver-side parse).
 
-    ``base`` resolves relative IRIs when the document carries no @base
-    of its own — the HTTP import path passes the graph URI, matching the
+    ``base`` resolves relative IRIs until the document sets an @base of
+    its own — the HTTP import path passes the graph URI, matching the
     reference where raptor parses against the model URI (import.c)."""
     triples = parse_turtle(_with_base(text, base))
     return _quads_frame(

@@ -296,6 +296,25 @@ def test_load_rdf_absolute_path_refs_under_a_path_base(
     assert (row.s, row.o_lex) == ("/abs/s", "//host/o")
 
 
+@pytest.mark.parametrize(
+    "doc, want",
+    [
+        # a prefix named base: at a line start is no base directive
+        ("@prefix base: <urn:x#> .\nbase:s <urn:rr:p> <rel> .\n",
+         "http://g/d/rel"),
+        # the document's own relative base resolves against the given one
+        ("@base <sub/> .\n<urn:x#s> <urn:rr:p> <rel> .\n",
+         "http://g/d/sub/rel"),
+    ],
+    ids=["prefix-named-base", "relative-own-base"],
+)
+def test_turtle_parses_against_the_given_base(spark, doc, want):
+    (row,) = rdfio.quads_from_turtle(
+        spark, doc, "urn:rr:g", base="http://g/d/x"
+    ).collect()
+    assert row.o_lex == want
+
+
 @pytest.mark.parametrize("suffix", [".trig", ".ttl"])
 def test_cli_restore_reads_every_syntax(spark, tmp_path, suffix):
     from fourstore_spark.cli import main
