@@ -370,22 +370,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "bind":
         # 4s-bind (src/frontend/4s-bind.c): the raw quad-pattern scan,
-        # constant slots pushed down to the parquet scan as plain column
-        # comparisons
-        from pyspark.sql import functions as F
-
+        # each constant slot matched by the term match rule, which the
+        # parquet scan takes as pushed-down column comparisons
+        from fourstore_spark.model import quad_term, term_eq
         from fourstore_spark.sources.rdfio import quads_to_nq_lines
         from fourstore_spark.store import read_store
 
         df = read_store(spark, args.store)
-        # slot -> quad column -> index of its value in the term row
-        slots = {
-            "g": {"g": 1},
-            "s": {"s": 1, "s_kind": 0},
-            "p": {"p": 1},
-            "o": {"o_lex": 1, "o_kind": 0, "o_dt": 2, "o_lang": 3},
-        }
-        for slot, cols in slots.items():
+        for slot in "gspo":
             text = getattr(args, slot)
             if text is None:
                 continue
@@ -393,8 +385,7 @@ def main(argv: list[str] | None = None) -> int:
             if t is None:
                 print(f"unparsable term: {text!r}", file=sys.stderr)
                 return 1
-            for c, i in cols.items():
-                df = df.where(F.col(c).isNull() if t[i] is None else F.col(c) == t[i])
+            df = df.where(term_eq(quad_term(slot), t))
         lines = quads_to_nq_lines(df)
         if args.limit:
             lines = lines.limit(args.limit)

@@ -46,7 +46,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from fourstore_spark.model import check_iri
+from fourstore_spark.model import SYSTEM_CONFIG_GRAPH, check_iri
 from fourstore_spark.sources.rdfio import (
     RDF_SYNTAXES,
     quads_from_text,
@@ -70,7 +70,6 @@ def _code_body(code_text: str) -> str:
 # ordinary quads in the system:config graph (rdf-constants.h:52-55)
 # loaded into a driver-side map before each bind (query-cache.c:160-225
 # fs_acl_load_system_info), reloaded whenever the store changes.
-FS_SYSTEM_CONFIG = "system:config"
 FS_ACL_ADMIN = "http://4store.org/acl#admin"
 FS_ACL_ONLY_ACCESS_BY = "http://4store.org/acl#onlyAccessBy"
 # used only while system:config holds NO acl#admin quad
@@ -122,7 +121,7 @@ class AclInfo:
         ))
 
 
-def load_acl_info(quads, max_rows: int = MAX_ACL_ROWS) -> AclInfo:
+def load_acl_info(quads) -> AclInfo:
     """One pruned scan of the system:config graph (the g/p filters reach
     the parquet read) -> AclInfo. Mirrors fs_acl_load_system_info
     (query-cache.c:160-225): the reference binds
@@ -135,7 +134,7 @@ def load_acl_info(quads, max_rows: int = MAX_ACL_ROWS) -> AclInfo:
 
     rows = (
         quads.where(
-            (F.col("g") == FS_SYSTEM_CONFIG)
+            (F.col("g") == SYSTEM_CONFIG_GRAPH)
             & F.col("p").isin([FS_ACL_ADMIN, FS_ACL_ONLY_ACCESS_BY])
             # apikeys hash as LITERALS in the reference (httpd.c:499
             # fs_hash_literal), so a URI/bnode object in an ACL quad
@@ -143,14 +142,13 @@ def load_acl_info(quads, max_rows: int = MAX_ACL_ROWS) -> AclInfo:
             & (F.col("o_kind") == KIND_LITERAL)
         )
         .select("s", "p", "o_lex")
-        .limit(max_rows + 1)
+        .limit(MAX_ACL_ROWS + 1)
         .collect()
     )
-    if len(rows) > max_rows:
+    if len(rows) > MAX_ACL_ROWS:
         raise ValueError(
-            f"system:config holds more than {max_rows} ACL quads; "
-            "refusing to materialize them driver-side. Raise max_rows "
-            "only if the config graph is genuinely that large."
+            f"system:config holds more than {MAX_ACL_ROWS} ACL quads; "
+            "refusing to materialize them driver-side."
         )
     admins = frozenset(r.o_lex for r in rows if r.p == FS_ACL_ADMIN)
     if not admins:
@@ -160,7 +158,7 @@ def load_acl_info(quads, max_rows: int = MAX_ACL_ROWS) -> AclInfo:
         if r.p == FS_ACL_ONLY_ACCESS_BY:
             graph_users.setdefault(r.s, set()).add(r.o_lex)
     graph_users = {g: frozenset(u) for g, u in graph_users.items()}
-    graph_users[FS_SYSTEM_CONFIG] = admins
+    graph_users[SYSTEM_CONFIG_GRAPH] = admins
     return AclInfo(admins, graph_users)
 
 

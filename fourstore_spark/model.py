@@ -76,6 +76,18 @@ CLI, the N-Quads dump), like the reference's one output dispatch
   write the same text;
 - XML writers put IRIs, datatypes and language tags into attributes
   through ``xml.sax.saxutils.quoteattr``.
+
+Term match — the one test that a stored or bound term equals a constant,
+like the reference's one bind routine (fs_bind, src/backend/
+query-backend.c:155-596): ``term_eq(term, term_row(t))`` on any term
+struct (``quad_term(slot)``, a variable column, a property-table value):
+
+- kind and lex are compared; a literal's dt and lang are compared
+  null-safe too (``num`` follows from lex and dt);
+- on ``quad_term`` Catalyst folds the struct access to the quad columns,
+  so the conditions still push down to the parquet scan;
+- ``term_row(a) == term_row(b)`` is the Python form (sameTerm of two
+  constants).
 """
 
 from __future__ import annotations
@@ -408,6 +420,21 @@ def quad_term(slot: str) -> Column:
     if slot == "s":
         return _term_col(F.col("s_kind"), F.col("s"))
     return uri_term(F.col(slot))
+
+
+def term_eq(term: Column, row: tuple) -> Column:
+    """The match rule: does term struct ``term`` equal the ``term_row``
+    constant ``row``? Kind and lex always; a literal's datatype and
+    language null-safe as well."""
+    kind, lex, dt, lang, _ = row
+    out = (term["kind"] == kind) & (term["lex"] == lex)
+    if kind == KIND_LITERAL:
+        out = (
+            out
+            & term["dt"].eqNullSafe(F.lit(dt))
+            & term["lang"].eqNullSafe(F.lit(lang))
+        )
+    return out
 
 
 def term_of(x: Column) -> Column:

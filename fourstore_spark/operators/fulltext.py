@@ -29,14 +29,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from fourstore_spark.model import KIND_LITERAL
+from fourstore_spark.model import KIND_LITERAL, SYSTEM_CONFIG_GRAPH
 
 FS_TEXT = "http://4store.org/fulltext#"
 FS_TEXT_INDEX = FS_TEXT + "index"
 FS_TEXT_TOKEN = FS_TEXT + "token"
 FS_TEXT_DMETAPHONE = FS_TEXT + "dmetaphone"
 FS_TEXT_STEM = FS_TEXT + "stem"
-SYSTEM_CONFIG = "system:config"
 
 # TOKEN_BOUNDARY (import.c:50) as a regex character class
 _BOUNDARY_RE = r"""[ \n\t\r!@$%^&*()\-_=+\[\]{};:"\\|<>,./?#]+"""
@@ -471,7 +470,7 @@ def fulltext_config(quads: DataFrame) -> dict[str, set[str]]:
     (import.c:705-743): predicate -> {'token','stem','dmetaphone'}."""
     rows = (
         quads.where(
-            (F.col("g") == SYSTEM_CONFIG) & (F.col("p") == FS_TEXT_INDEX)
+            (F.col("g") == SYSTEM_CONFIG_GRAPH) & (F.col("p") == FS_TEXT_INDEX)
         )
         .select("s", "o_lex")
         .collect()

@@ -51,11 +51,12 @@ from fourstore_spark.model import (
     term_row,
 )
 from fourstore_spark.sparql import algebra as A
+from fourstore_spark.sparql.parser import unescape
 
 _TERM_RE = re.compile(
     r"""\s*(?:
         <(?P<iri>[^>]*)>
-      | (?P<bnode>_:[^\s]+)
+      | (?P<bnode>_:[^\s]*[^\s.])
       | "(?P<lit>(?:[^"\\]|\\.)*)"
         (?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^<(?P<dt>[^>]*)>)?
       | (?P<dot>\.)
@@ -63,47 +64,15 @@ _TERM_RE = re.compile(
     re.VERBOSE,
 )
 
-_UNESC = {
-    "t": "\t", "n": "\n", "r": "\r", "b": "\b", "f": "\f",
-    '"': '"', "'": "'", "\\": "\\",
-}
-
-
-def _unescape(s: str) -> str:
-    if "\\" not in s:
-        return s
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            n = s[i + 1]
-            if n in _UNESC:
-                out.append(_UNESC[n])
-                i += 2
-                continue
-            if n == "u":
-                out.append(chr(int(s[i + 2 : i + 6], 16)))
-                i += 6
-                continue
-            if n == "U":
-                out.append(chr(int(s[i + 2 : i + 10], 16)))
-                i += 10
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
 def _nt_term(m: re.Match) -> tuple:
     """Term row of one N-Triples term match (not the final dot)."""
     if m.group("iri") is not None:
-        return iri_row(_unescape(m.group("iri")))
+        return iri_row(unescape(m.group("iri")))
     if m.group("bnode") is not None:
         return bnode_row(m.group("bnode"))
     dt = m.group("dt")
-    lex = _unescape(m.group("lit"))
-    return term_row((lex, dt and _unescape(dt), m.group("lang")))
+    lex = unescape(m.group("lit"))
+    return term_row((lex, dt and unescape(dt), m.group("lang")))
 
 
 def _quad(g: str, s: tuple, p: str, o: tuple) -> tuple:

@@ -52,7 +52,12 @@ _ESCAPES = {
 }
 
 
-def _unescape(s: str) -> str:
+def unescape(s: str) -> str:
+    """The string-escape decoder of SPARQL, Turtle and N-Triples
+    literals and IRIs: ECHAR and UCHAR; a UCHAR that the end of the
+    string cuts short stays as written."""
+    if "\\" not in s:
+        return s
     out = []
     i = 0
     while i < len(s):
@@ -152,8 +157,8 @@ class Parser:
 
     def _string_token_value(self, raw: str) -> str:
         if raw[:3] in ('"""', "'''"):
-            return _unescape(raw[3:-3])
-        return _unescape(raw[1:-1])
+            return unescape(raw[3:-3])
+        return unescape(raw[1:-1])
 
     def parse_literal(self) -> A.Literal:
         t = self.next()

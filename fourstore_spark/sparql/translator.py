@@ -27,7 +27,9 @@ only maybe-unbound shared variables degrade to a residual OR condition.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +51,7 @@ from fourstore_spark.model import (
     quad_cols,
     quad_term,
     stored_label,
+    term_eq,
     term_of,
     term_order_key,
     term_rid,
@@ -585,85 +588,71 @@ class Translator:
         means an EMPTY default graph."""
         return bool(self.from_graphs or self.from_named)
 
-    @staticmethod
-    def _in_or_false(col: Column, vals) -> Column:
-        return col.isin(list(vals)) if vals else F.lit(False)
-
-    def _graph_filter(self, df: DataFrame, graph) -> DataFrame:
-        """Apply the graph-slot scoping shared by quad scans, path
-        closures and zero-length-path node sets."""
+    def _graph_scope(self, g: Column, graph) -> list[Column]:
+        """The graph-scope rule: the conjuncts on graph column ``g`` that
+        keep what a pattern sees in graph context ``graph`` (None,
+        GRAPH <iri> or GRAPH ?g) of the query's dataset. Every quad,
+        path and property-table scan scopes through it; [] sees every
+        graph."""
         if graph is None:
             if self._has_dataset():
-                df = df.where(self._in_or_false(F.col("g"), self.from_graphs))
-            elif not self.union_default_graph:
-                df = df.where(F.col("g") == "default:")
-        elif isinstance(graph, A.Iri):
-            df = df.where(F.col("g") == graph.value)
+                return [g.isin(list(self.from_graphs or []))]
+            if not self.union_default_graph:
+                return [g == DEFAULT_GRAPH]
+            return []
+        if isinstance(graph, A.Iri):
             if self._has_dataset() and graph.value not in (
                 self.from_named or []
             ):
-                df = df.where(F.lit(False))  # graph outside the dataset
-        elif isinstance(graph, A.Var):
-            # GRAPH ?g ranges over *named* graphs only per spec — 4store
-            # also exposes <default:> as a matchable graph (its exemplars
-            # show GRAPH ?G binding it); the HTTP parity surface opts in
-            if not self.graph_var_includes_default:
-                df = df.where(F.col("g") != DEFAULT_GRAPH)
-            if self._has_dataset():
-                df = df.where(self._in_or_false(F.col("g"), self.from_named))
+                return [F.lit(False)]  # graph outside the dataset
+            return [g == graph.value]
+        # GRAPH ?g ranges over *named* graphs only per spec — 4store also
+        # exposes <default:> as a matchable graph (its exemplars show
+        # GRAPH ?G binding it); the HTTP parity surface opts in
+        out = [] if self.graph_var_includes_default else [g != DEFAULT_GRAPH]
+        if self._has_dataset():
+            out.append(g.isin(list(self.from_named or [])))
+        return out
+
+    def _scoped_quads(self, graph) -> DataFrame:
+        """The quads a pattern in graph context ``graph`` sees."""
+        df = self.quads
+        for c in self._graph_scope(F.col("g"), graph):
+            df = df.where(c)
         return df
 
     def _pattern_df(self, tp: A.TriplePattern, graph) -> Sol:
         """One quad-pattern scan: fs_bind (src/backend/query-backend.c:155)
         as filter+project; constant slots push down to the parquet scan."""
-        df = self._graph_filter(self.quads, graph)
+        df = self._scoped_quads(graph)
 
         cond = []
         proj: dict[str, Column] = {}
 
-        def slot_var(term, slot):
-            name = term.name if isinstance(term, A.Var) else "__bn_" + term.label
-            if name in proj:
+        if isinstance(tp.s, A.Literal):
+            raise ValueError("literal subject")
+        slots = [("s", tp.s), ("p", tp.p), ("o", tp.o)]
+        if isinstance(graph, A.Var):
+            slots.append(("g", graph))  # graph variable binding
+        for slot, term in slots:
+            if isinstance(term, A.PathNeg):
+                # negated property set (forward members only at this
+                # level; _path_sol splits inverse members into a swapped
+                # scan)
+                if term.forward:
+                    cond.append(
+                        ~F.col("p").isin([i.value for i in term.forward])
+                    )
+                continue
+            name = self._slot_name(term)
+            if name is None:
+                cond.append(term_eq(quad_term(slot), term_row(term)))
+            elif name in proj:
                 # repeated variable in one pattern (FS_BIND_SAME_*,
                 # src/common/4s-datatypes.h:23-38)
                 cond.append(proj[name] == quad_term(slot))
             else:
                 proj[name] = quad_term(slot)
-
-        # subject
-        if isinstance(tp.s, (A.Var, A.BNode)):
-            slot_var(tp.s, "s")
-        elif isinstance(tp.s, A.Iri):
-            cond.append(F.col("s") == tp.s.value)
-            cond.append(F.col("s_kind") == KIND_URI)
-        else:
-            raise ValueError("literal subject")
-        # predicate
-        if isinstance(tp.p, A.Var):
-            slot_var(tp.p, "p")
-        elif isinstance(tp.p, A.Iri):
-            cond.append(F.col("p") == tp.p.value)
-        elif isinstance(tp.p, A.PathNeg):
-            # negated property set (forward members only at this level;
-            # _path_sol splits inverse members into a swapped scan)
-            if tp.p.forward:
-                cond.append(
-                    ~F.col("p").isin([i.value for i in tp.p.forward])
-                )
-        # object
-        if isinstance(tp.o, (A.Var, A.BNode)):
-            slot_var(tp.o, "o")
-        elif isinstance(tp.o, A.Iri):
-            cond.append(F.col("o_kind") == KIND_URI)
-            cond.append(F.col("o_lex") == tp.o.value)
-        elif isinstance(tp.o, A.Literal):
-            cond.append(F.col("o_kind") == KIND_LITERAL)
-            cond.append(F.col("o_lex") == tp.o.lex)
-            cond.append(F.col("o_dt").eqNullSafe(F.lit(tp.o.dt)))
-            cond.append(F.col("o_lang").eqNullSafe(F.lit(tp.o.lang)))
-        # graph variable binding
-        if isinstance(graph, A.Var):
-            slot_var(graph, "g")
 
         for c in cond:
             df = df.where(c)
@@ -714,15 +703,9 @@ class Translator:
         sols = [self._star_scan(sname, pats, graph) for sname, pats in stars]
 
         def tp_vars(tp):
-            out = set()
-            for t in (tp.s, tp.p, tp.o):
-                if isinstance(t, A.Var):
-                    out.add(t.name)
-                elif isinstance(t, A.BNode):
-                    out.add("__bn_" + t.label)
-            if isinstance(graph, A.Var):
-                out.add(graph.name)
-            return out
+            return {
+                self._slot_name(t) for t in (tp.s, tp.p, tp.o, graph)
+            } - {None}
 
         if rest:
             remaining = sorted(
@@ -844,18 +827,6 @@ class Translator:
             return self._path_mod_sol(s, path, o, graph)
         raise TypeError(f"cannot translate path {path!r}")
 
-    @staticmethod
-    def _term_match(col: Column, term) -> Column:
-        """Column predicate: does a term-struct column equal a constant?"""
-        if isinstance(term, A.Iri):
-            return (col["kind"] == KIND_URI) & (col["lex"] == term.value)
-        return (
-            (col["kind"] == KIND_LITERAL)
-            & (col["lex"] == term.lex)
-            & col["dt"].eqNullSafe(F.lit(term.dt))
-            & col["lang"].eqNullSafe(F.lit(term.lang))
-        )
-
     def _path_mod_sol(self, s, path: A.PathMod, o, graph) -> Sol:
         pa, pb = self._fresh("pa"), self._fresh("pb")
         step_sol = self._path_sol(A.Var(pa), path.inner, A.Var(pb), graph)
@@ -869,7 +840,7 @@ class Translator:
             # BFS seeded at the bound endpoint — at scale this explores
             # the reachable cone, not the whole graph's closure
             pairs = self._transitive_closure(
-                step, pa, pb, ctx, seed=self._term_match(F.col(pa), s)
+                step, pa, pb, ctx, seed=term_eq(F.col(pa), term_row(s))
             )
         elif o_const:
             # bound object: traverse the reversed edges from o, swap back
@@ -877,7 +848,7 @@ class Translator:
                 F.col(pb).alias(pa), F.col(pa).alias(pb), *ctx
             )
             pairs = self._transitive_closure(
-                rev, pa, pb, ctx, seed=self._term_match(F.col(pa), o)
+                rev, pa, pb, ctx, seed=term_eq(F.col(pa), term_row(o))
             ).select(F.col(pb).alias(pa), F.col(pa).alias(pb), *ctx)
         else:
             pairs = self._transitive_closure(step, pa, pb, ctx)
@@ -976,7 +947,7 @@ class Translator:
             node = const_term_col(term_row(term))
             if ctx:
                 # one zero-length row per named graph in scope
-                g = self._graph_filter(self.quads, graph).select(
+                g = self._scoped_quads(graph).select(
                     quad_term("g").alias(ctx[0])
                 ).distinct()
                 out = g.select(node.alias(pa), node.alias(pb), ctx[0])
@@ -984,17 +955,8 @@ class Translator:
                 out = self.spark.range(1).select(
                     node.alias(pa), node.alias(pb)
                 )
-            if s_const and o_const:
-                same = (
-                    isinstance(s, A.Iri) == isinstance(o, A.Iri)
-                    and (
-                        (s.value == o.value)
-                        if isinstance(s, A.Iri)
-                        else (s.lex, s.dt, s.lang) == (o.lex, o.dt, o.lang)
-                    )
-                )
-                if not same:
-                    out = out.where(F.lit(False))
+            if s_const and o_const and term_row(s) != term_row(o):
+                out = out.where(F.lit(False))
             return out
         nodes = self._graph_nodes(graph, ctx)
         return nodes.select(
@@ -1005,7 +967,7 @@ class Translator:
         """Distinct RDF nodes (subjects ∪ objects) of the scoped graph,
         as a __node term-struct column (+ the graph variable column when
         inside GRAPH ?g)."""
-        df = self._graph_filter(self.quads, graph)
+        df = self._scoped_quads(graph)
         g_cols = [quad_term("g").alias(ctx[0])] if ctx else []
         subs = df.select(quad_term("s").alias("__node"), *g_cols)
         objs = df.select(quad_term("o").alias("__node"), *g_cols)
@@ -1038,7 +1000,7 @@ class Translator:
                 else:
                     out_names[col] = name
             else:
-                df = df.where(self._term_match(F.col(col), term))
+                df = df.where(term_eq(F.col(col), term_row(term)))
         sel = [F.col(c).alias(n) for c, n in out_names.items()] + [
             F.col(c) for c in ctx
         ]
@@ -1115,7 +1077,7 @@ class Translator:
             and all(tp.p.value in self.stats.pred_columns for tp, _ in patterns)
         ):
             return self._star_scan_pt(sname, patterns, graph)
-        df = self._graph_filter(self.quads, graph)
+        df = self._scoped_quads(graph)
 
         df = df.where(F.col("p").isin([tp.p.value for tp, _ in patterns]))
         o_term = quad_term("o")
@@ -1130,18 +1092,7 @@ class Translator:
         for i, (tp, oname) in enumerate(patterns):
             m = F.col("p") == tp.p.value
             if oname is None:  # constant object: existence constraint
-                if isinstance(tp.o, A.Iri):
-                    m = m & (F.col("o_kind") == KIND_URI) & (
-                        F.col("o_lex") == tp.o.value
-                    )
-                else:
-                    m = (
-                        m
-                        & (F.col("o_kind") == KIND_LITERAL)
-                        & (F.col("o_lex") == tp.o.lex)
-                        & F.col("o_dt").eqNullSafe(F.lit(tp.o.dt))
-                        & F.col("o_lang").eqNullSafe(F.lit(tp.o.lang))
-                    )
+                m = m & term_eq(o_term, term_row(tp.o))
                 name = f"__c{i}"
                 aggs.append(F.max(F.when(m, 1)).alias(name))
                 requires.append(name)
@@ -1196,39 +1147,9 @@ class Translator:
         predicates)."""
         df = self.stats.subjects
 
-        def graph_vals(vals: Column) -> Column:
-            if isinstance(graph, A.Iri):
-                if self._has_dataset() and graph.value not in (
-                    self.from_named or []
-                ):
-                    return F.filter(vals, lambda x: F.lit(False))
-                return F.filter(vals, lambda x: x["g"] == graph.value)
-            if self._has_dataset():
-                gs = list(self.from_graphs or [])
-                return F.filter(
-                    vals,
-                    (lambda x: x["g"].isin(gs)) if gs
-                    else (lambda x: F.lit(False)),
-                )
-            if not self.union_default_graph:
-                return F.filter(vals, lambda x: x["g"] == DEFAULT_GRAPH)
-            return vals
-
-        def graph_cond(x: Column) -> Column | None:
-            # flat-column analogue of graph_vals: a predicate the store
-            # proved single-valued is ONE (g, o) struct, so graph scoping
-            # is a plain condition, not an array filter
-            if isinstance(graph, A.Iri):
-                if self._has_dataset() and graph.value not in (
-                    self.from_named or []
-                ):
-                    return F.lit(False)
-                return x["g"] == graph.value
-            if self._has_dataset():
-                return self._in_or_false(x["g"], self.from_graphs)
-            if not self.union_default_graph:
-                return x["g"] == DEFAULT_GRAPH
-            return None
+        def scope_of(x: Column) -> list[Column]:
+            # the graph-scope conjuncts on a stored (g, o) value
+            return self._graph_scope(x["g"], graph)
 
         from pyspark.sql.types import ArrayType
 
@@ -1243,21 +1164,10 @@ class Translator:
         ovars: list[tuple[str, str]] = []  # (internal col, variable name)
         for i, (tp, oname) in enumerate(patterns):
             cname = self.stats.pred_columns[tp.p.value]
-            if isinstance(tp.o, A.Iri):
-                match = lambda x, t=tp: (x["kind"] == KIND_URI) & (
-                    x["lex"] == t.o.value
-                )
-            elif isinstance(tp.o, A.Literal):
-                match = lambda x, t=tp: (
-                    (x["kind"] == KIND_LITERAL)
-                    & (x["lex"] == t.o.lex)
-                    & x["dt"].eqNullSafe(F.lit(t.o.dt))
-                    & x["lang"].eqNullSafe(F.lit(t.o.lang))
-                )
-            else:
-                match = None
             if not isinstance(col_type[cname], ArrayType):
-                # store-v4 flat struct column (single-valued predicate).
+                # store-v4 flat struct column (single-valued predicate):
+                # ONE (g, o) struct, so graph scoping is a plain
+                # condition, not an array filter.
                 # Null-check the KIND LEAF, not the struct: a struct-level
                 # isNotNull references the whole struct and defeats
                 # Catalyst's nested-schema pruning, making the parquet
@@ -1267,21 +1177,26 @@ class Translator:
                 # non-null exactly when the struct is present (write_store
                 # always populates it).
                 v = F.col(cname)
-                gcond = graph_cond(v)
-                keep = v["kind"].isNotNull() if gcond is None else (
-                    v["kind"].isNotNull() & gcond
+                keep = reduce(
+                    operator.and_, scope_of(v), v["kind"].isNotNull()
                 )
                 if oname is None:  # constant-object existence constraint
-                    df = df.where(keep & match(v))
+                    df = df.where(keep & term_eq(v, term_row(tp.o)))
                     continue
                 df = df.where(keep)
                 df = df.withColumn(f"__o{i}", term_of(v))
                 ovars.append((f"__o{i}", oname))
                 continue
-            vals = graph_vals(F.col(cname))
+            vals = F.col(cname)
+            if scope_of(vals):
+                # (an unscoped star reads the column as stored)
+                vals = F.filter(
+                    vals, lambda x: reduce(operator.and_, scope_of(x))
+                )
             if oname is None:
+                row = term_row(tp.o)
                 df = df.where(
-                    vals.isNotNull() & F.exists(vals, match)
+                    vals.isNotNull() & F.exists(vals, lambda x: term_eq(x, row))
                 )
                 continue
             df = df.where(vals.isNotNull() & (F.size(vals) > 0))
@@ -2193,7 +2108,7 @@ class Translator:
             # description draws only from it (DESCRIBE <x> FROM
             # <nonexistent> is empty; reference httpd golden 'describe')
             gs = list(self.from_graphs or []) + list(self.from_named or [])
-            src = src.where(self._in_or_false(F.col("g"), gs))
+            src = src.where(F.col("g").isin(gs))
         return src.join(
             subjects, src["s"] == subjects["__subj"], "left_semi"
         ).drop("g")

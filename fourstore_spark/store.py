@@ -36,14 +36,13 @@ def write_store(
     quads: DataFrame,
     path: str,
     partitions: int | None = None,
-    compute_stats: bool = True,
 ) -> dict:
     """Materialize a quads DataFrame at ``path``: one directory per
     predicate, hash(s)-bucketed and s-sorted files within.
 
-    With compute_stats, the manifest records which predicates are
-    *functional* (at most one object per (g,s)) — the stats analogue of
-    the reference's per-predicate frequency histograms (fs_bind_freq,
+    The manifest records which predicates are *functional* (at most one
+    object per (g,s)) — the stats analogue of the reference's
+    per-predicate frequency histograms (fs_bind_freq,
     optimiser.c:445-524). The star-scan planner uses them to aggregate
     with codegen first() instead of collect_list+explode."""
     spark = quads.sparkSession
@@ -107,16 +106,14 @@ def write_store(
     pred_columns, single_valued = _write_subjects(
         stored, path, partitions, stats_rows
     )
-    pred_stats: dict = {}
-    if compute_stats:
-        # per-predicate cardinalities — the reference's frequency
-        # histograms (fs_bind_freq, optimiser.c:445-524; backend message
-        # FS_GET_QUAD_FREQ 4store.h:68). quads = scan estimate for a
-        # constant-p pattern; subjects (exact) = star-scan row estimate.
-        # The planner turns these into F.broadcast() hints, so dimension
-        # joins stay broadcast at ANY autoBroadcastJoinThreshold instead
-        # of depending on Spark's (hopeless, post-filter) size guesses.
-        pred_stats = {r["p"]: [int(r["n"]), int(r["ns"])] for r in stats_rows}
+    # per-predicate cardinalities — the reference's frequency
+    # histograms (fs_bind_freq, optimiser.c:445-524; backend message
+    # FS_GET_QUAD_FREQ 4store.h:68). quads = scan estimate for a
+    # constant-p pattern; subjects (exact) = star-scan row estimate.
+    # The planner turns these into F.broadcast() hints, so dimension
+    # joins stay broadcast at ANY autoBroadcastJoinThreshold instead
+    # of depending on Spark's (hopeless, post-filter) size guesses.
+    pred_stats = {r["p"]: [int(r["n"]), int(r["ns"])] for r in stats_rows}
     manifest = {
         "format": "fourstore-quads-parquet-v4",
         "rows": n,
@@ -126,9 +123,7 @@ def write_store(
         "single_valued_preds": single_valued,
         "pred_stats": pred_stats,
         # predicate -> proven-uniform numeric datatype (slim aggregates)
-        "pred_numeric_dt": _numeric_dt_stats(stats_rows)
-        if compute_stats
-        else {},
+        "pred_numeric_dt": _numeric_dt_stats(stats_rows),
         # predicate -> physical column name in _subjects
         "pred_columns": pred_columns,
     }

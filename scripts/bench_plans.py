@@ -8,6 +8,11 @@ Reuses bench.py's exact query construction (same store, same params) but
 captures the compiled physical plan instead of executing, so it can run
 without perturbing timing measurements. The q1-q5 SPARQL queries go
 through the same run_fresh flatten wrapper the bench times.
+
+The q1-q5 plans are written twice: over ``SparqlEngine.from_store`` (its
+stars read the property table) and, as <query>_plain_<suffix>.txt, over
+a plain engine on the same store's quads (the served engine's shape: its
+stars group the quads).
 """
 
 from __future__ import annotations
@@ -51,7 +56,7 @@ def main() -> None:
     from fourstore_spark.operators.textstats import text_stats
     from fourstore_spark.sources.relational import quads_from_sf_dir
     from fourstore_spark.sparql.engine import SparqlEngine
-    from fourstore_spark.store import read_manifest, write_store
+    from fourstore_spark.store import read_manifest, read_store, write_store
 
     import __spark_entry__ as entry_mod
 
@@ -63,47 +68,58 @@ def main() -> None:
         or "pred_numeric_dt" not in manifest
     ):
         write_store(quads_from_sf_dir(spark, sf_dir), store_path)
-    eng = SparqlEngine.from_store(spark, store_path)
+    engines = {
+        "": SparqlEngine.from_store(spark, store_path),
+        "_plain": SparqlEngine(spark, read_store(spark, store_path)),
+    }
 
     P = "urn:col:"
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
-    def fresh(text, **types):
-        return eng.query(text).flat(**types)
-
-    dfs = {
-        "q1_agg": lambda: fresh(
-            entry_mod._FLAGSHIP, **entry_mod._FLAGSHIP_TYPES
-        ),
-        "q2_join": lambda: fresh(
+    # q1-q5: SPARQL text -> flat() column types
+    queries = {
+        "q1_agg": (entry_mod._FLAGSHIP, entry_mod._FLAGSHIP_TYPES),
+        "q2_join": (
             f"""SELECT ?cname ?nname ?rname WHERE {{
                   ?c <{P}customer#c_name> ?cname ;
                      <{P}customer#c_nationkey> ?nat .
                   ?nat <{P}nation#n_name> ?nname ;
                        <{P}nation#n_regionkey> ?reg .
-                  ?reg <{P}region#r_name> ?rname }}"""
+                  ?reg <{P}region#r_name> ?rname }}""",
+            {},
         ),
-        "q3_optional": lambda: fresh(
+        "q3_optional": (
             f"""SELECT ?o ?pk WHERE {{
                   ?o <{P}orders#o_orderstatus> ?st .
                   OPTIONAL {{ ?li <{P}lineitem#l_orderkey> ?o ;
-                                  <{P}lineitem#l_partkey> ?pk }} }}"""
+                                  <{P}lineitem#l_partkey> ?pk }} }}""",
+            {},
         ),
-        "q4_topk": lambda: fresh(
+        "q4_topk": (
             f"SELECT ?c ?bal WHERE {{ ?c <{P}customer#c_acctbal> ?bal }} "
             f"ORDER BY DESC(?bal) ?c LIMIT 100",
-            bal="num",
+            dict(bal="num"),
         ),
-        "q5_groupjoin": lambda: fresh(
+        "q5_groupjoin": (
             f"""SELECT ?nname (SUM(?tp) AS ?total) (COUNT(?o) AS ?n)
                 WHERE {{ ?o <{P}orders#o_custkey> ?c ;
                             <{P}orders#o_totalprice> ?tp .
                          ?c <{P}customer#c_nationkey> ?nat .
                          ?nat <{P}nation#n_name> ?nname }}
                 GROUP BY ?nname""",
-            total="num", n="int",
+            dict(total="num", n="int"),
         ),
+    }
+
+    dfs = {}
+    for tag, eng in engines.items():
+        for name, (text, types) in queries.items():
+            dfs[name + tag] = (
+                lambda eng=eng, text=text, types=types:
+                eng.query(text).flat(**types)
+            )
+    dfs.update({
         "q6_minhash": lambda: minhash_lsh_candidates(
             docs, "text", "doc_id", num_hashes=32, bands=8
         ),
@@ -118,7 +134,7 @@ def main() -> None:
             F.sum("n_tokens"), F.avg("quality"),
             F.count_distinct("fingerprint"),
         ),
-    }
+    })
 
     for name, build in dfs.items():
         df = build()

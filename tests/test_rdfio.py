@@ -340,3 +340,37 @@ def test_trix_roundtrip_store_equality(spark, tmp_path):
 
     again = load_rdf(spark, str(p))
     assert again.count() == orig.count()
+
+
+def test_nt_short_uchar_stays_as_written():
+    """N-Triples and SPARQL share one escape decoder: a \\u escape cut
+    short by the end of the literal stays as written (it was read as
+    U+0012)."""
+    from fourstore_spark.sources.rdfio import parse_nt_line
+    from fourstore_spark.sparql.parser import parse_query
+
+    q = parse_nt_line(r'<urn:s> <urn:p> "x\u12" .')
+    assert q[5] == "x\\u12"
+    lit = parse_query(r'SELECT * WHERE { ?s ?p "x\u12" }').pattern.triples[0].o
+    assert lit.lex == q[5]
+    assert parse_nt_line(r'<urn:s> <urn:p> "A\U0001F600\t" .')[5] == (
+        "A\U0001F600\t"
+    )
+
+
+@pytest.mark.parametrize(
+    "line, label",
+    [
+        ("<urn:s> <urn:p> _:o.", "_:o"),
+        ("<urn:s> <urn:p> _:o .", "_:o"),
+        ("<urn:s> <urn:p> _:o.b.", "_:o.b"),
+        ("<urn:s> <urn:p> _:o~3 .", "_:o~3"),  # what cli dump writes
+        ("<urn:s> <urn:p> _:o~3.", "_:o~3"),
+    ],
+)
+def test_nt_bnode_label_stops_before_the_dot(line, label):
+    """A blank-node label cannot end in '.': the statement's dot right
+    after it is the dot (it was stored as part of the label)."""
+    from fourstore_spark.sources.rdfio import parse_nt_line
+
+    assert parse_nt_line(line)[5] == label
