@@ -88,10 +88,16 @@ struct (``quad_term(slot)``, a variable column, a property-table value):
   so the conditions still push down to the parquet scan;
 - ``term_row(a) == term_row(b)`` is the Python form (sameTerm of two
   constants).
+
+Term structs of quad slots (``quad_term``) and of constants
+(``const_term_col``) are one ``F.expr`` each, generated from
+``TERM_FIELDS`` and ``TERM_SCHEMA``: one parse instead of a py4j command
+per field. Every constant in that SQL text is written by ``sql_str``.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from urllib.parse import urljoin
 
@@ -391,15 +397,54 @@ def _term_col(kind: Column, lex: Column, dt=None, lang=None, num=None) -> Column
     )
 
 
+# ---------------------------------------------------- term struct SQL
+# SQL type of each term field, in TERM_FIELDS order
+_TERM_SQL_TYPES = tuple(f.dataType.simpleString().upper() for f in TERM_SCHEMA.fields)
+
+
+def sql_str(text: str) -> str:
+    """The SQL string-literal renderer: every constant put into Spark SQL
+    text goes through it. Backslash and quote are escaped; ``$`` is
+    written ``\\u0024`` because the SQL parser substitutes ``${...}``
+    variables in the raw text, inside quotes too."""
+    for c, e in (("\\", "\\\\"), ("'", "\\'"), ("$", "\\u0024")):
+        text = text.replace(c, e)
+    return f"'{text}'"
+
+
+def _sql_const(value, sql_type: str) -> str:
+    """SQL text of a constant cast to ``sql_type`` (None: a typed null)."""
+    if value is None:
+        v = "NULL"
+    elif isinstance(value, str):
+        v = sql_str(value)
+    elif isinstance(value, float):
+        # repr round-trips every finite double; inf and nan have no
+        # literal, so they are cast from Java's spelling
+        v = f"{value!r}D" if math.isfinite(value) else sql_str(
+            repr(value).replace("inf", "Infinity").replace("nan", "NaN")
+        )
+    else:
+        v = str(int(value))
+    return f"CAST({v} AS {sql_type})"
+
+
+def _term_expr(*parts: str) -> Column:
+    """Term struct from the SQL text of its leading fields, in
+    TERM_FIELDS order; the fields left out are typed nulls. One
+    ``F.expr``, one parse."""
+    parts += tuple(_sql_const(None, t) for t in _TERM_SQL_TYPES[len(parts):])
+    body = ", ".join(f"{p} AS {f}" for p, f in zip(parts, TERM_FIELDS))
+    return F.expr(f"struct({body})")
+
+
 def const_term_col(row: tuple) -> Column:
     """Constant term struct of a ``term_row`` tuple."""
-    kind, lex, dt, lang, num = row
-    return _term_col(
-        F.lit(kind).cast("tinyint"),
-        F.lit(lex),
-        F.lit(dt).cast("string"),
-        F.lit(lang).cast("string"),
-        F.lit(num).cast("double"),
+    kind, lex, *rest = row
+    return _term_expr(
+        _sql_const(kind, _TERM_SQL_TYPES[0]),
+        sql_str(lex),
+        *(_sql_const(v, t) for v, t in zip(rest, _TERM_SQL_TYPES[2:])),
     )
 
 
@@ -416,10 +461,10 @@ def bnode_term(lex: Column) -> Column:
 def quad_term(slot: str) -> Column:
     """Term struct of one slot of a quads row: "s", "p", "g" or "o"."""
     if slot == "o":
-        return _term_col(*(F.col("o_" + f) for f in TERM_FIELDS))
+        return _term_expr(*(f"`o_{f}`" for f in TERM_FIELDS))
     if slot == "s":
-        return _term_col(F.col("s_kind"), F.col("s"))
-    return uri_term(F.col(slot))
+        return _term_expr("`s_kind`", "`s`")
+    return _term_expr(_sql_const(KIND_URI, _TERM_SQL_TYPES[0]), f"`{slot}`")
 
 
 def term_eq(term: Column, row: tuple) -> Column:

@@ -6,8 +6,11 @@ Parity with the reference's output dispatch (fs_query_results_output,
 :1900, output_text :2014, output_csv :2143, output_json :2248) against the
 W3C formats those writers implement.
 
-All writers stream ``df.toLocalIterator()`` — the driver holds one
-partition at a time, never the whole result set.
+Every writer pulls its rows with one Spark action (``_rows``:
+``df.collect()``) and returns the whole body as one string: the rows and
+the body of one result are in memory at once. One action is one
+Spark job however many partitions the store's union of delta parts has;
+under adaptive execution each shuffle stage of the plan is one job more.
 """
 
 from __future__ import annotations
@@ -79,9 +82,14 @@ def _nt_triple(row, bn: _BnodeNamer, iri=nt_iri) -> tuple:
     )
 
 
+def _rows(df) -> list:
+    """The rows of a result, pulled with one Spark action."""
+    return df.collect()
+
+
 def _iter_bindings(df, variables):
     bn = _BnodeNamer()
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         binding = {}
         for v in variables:
             t = _term_dict(row[v], bn)
@@ -157,7 +165,7 @@ def select_csv(df, variables=None) -> str:
     variables = variables or df.columns
     bn = _BnodeNamer()
     lines = [",".join(variables)]
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         lines.append(",".join(_csv_cell(row[v], bn) for v in variables))
     return "\r\n".join(lines) + "\r\n"
 
@@ -168,7 +176,7 @@ def select_tsv(df, variables=None) -> str:
     variables = variables or df.columns
     bn = _BnodeNamer()
     lines = ["\t".join("?" + v for v in variables)]
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         lines.append("\t".join(_nt_cell(row[v], bn) for v in variables))
     return "\n".join(lines) + "\n"
 
@@ -205,7 +213,7 @@ def select_text(df, variables=None, ask: bool | None = None) -> str:
     bn = _BnodeNamer()
     variables = variables or df.columns
     lines = ["\t".join("?" + v for v in variables)]
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         lines.append("\t".join(cell(row[v]) for v in variables))
     return "\n".join(lines) + "\n"
 
@@ -237,7 +245,7 @@ def select_testcase(df, variables=None, ask: bool | None = None) -> str:
     head += ", ".join(f'"{v}"' for v in variables)
     bn = _BnodeNamer()
     sols = []
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         binds = []
         for v in variables:
             val = _nt_cell(row[v], bn)
@@ -257,7 +265,7 @@ def graph_ntriples(df) -> str:
     text (the reference serializes via Raptor, results.c:1659-1898)."""
     bn = _BnodeNamer()
     lines = [
-        " ".join(_nt_triple(row, bn)) + " ." for row in df.toLocalIterator()
+        " ".join(_nt_triple(row, bn)) + " ." for row in _rows(df)
     ]
     return "\n".join(lines) + ("\n" if lines else "")
 
@@ -277,7 +285,7 @@ def graph_rdfxml(df) -> str:
     ]
     split = _re.compile(r"^(.*[#/:])([A-Za-z_][\w.-]*)$")
 
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         m = split.match(row["p"])
         if not m:
             # predicate IRI with no splittable local name cannot be an
@@ -313,7 +321,7 @@ def graph_turtle(df) -> str:
     Turtle parser accepts it)."""
     bn = _BnodeNamer()
     by_subject: dict = {}
-    for row in df.toLocalIterator():
+    for row in _rows(df):
         s, p, o = _nt_triple(row, bn)
         by_subject.setdefault(s, []).append(f"{p} {o}")
     blocks = [f"{s} " + " ;\n    ".join(pos) + " ." for s, pos in by_subject.items()]
@@ -337,7 +345,7 @@ def graph_turtle_abbrev(df, base: str | None = None) -> str:
         return nt_iri(v)
 
     bn = _BnodeNamer()
-    triples = sorted({_nt_triple(row, bn, iri) for row in df.toLocalIterator()})
+    triples = sorted({_nt_triple(row, bn, iri) for row in _rows(df)})
 
     out = []
     if base:

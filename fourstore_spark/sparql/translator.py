@@ -2079,7 +2079,18 @@ class Translator:
 
     def _describe(self, q: A.Query, sol: Sol) -> DataFrame:
         """DESCRIBE (describe_uri, src/frontend/results.c:1659-1710): all
-        quads whose subject is a described resource — a semi-join."""
+        quads whose subject is a described resource. Described IRIs alone
+        are one filtered scan; variables or ``*`` make it a semi-join."""
+        src = self.quads
+        if self._has_dataset():
+            # §13.2: FROM/FROM NAMED define the dataset exactly — the
+            # description draws only from it (DESCRIBE <x> FROM
+            # <nonexistent> is empty; reference httpd golden 'describe')
+            gs = list(self.from_graphs or []) + list(self.from_named or [])
+            src = src.where(F.col("g").isin(gs))
+        if all(isinstance(t, A.Iri) for t in q.describe_terms):
+            iris = [t.value for t in q.describe_terms]
+            return src.where(F.col("s").isin(iris)).drop("g")
         nodes = []
         for t in q.describe_terms:
             if t == "*":
@@ -2102,13 +2113,6 @@ class Translator:
         subjects = terms.where(
             F.col("t")["kind"] != KIND_LITERAL
         ).select(F.col("t")["lex"].alias("__subj")).distinct()
-        src = self.quads
-        if self._has_dataset():
-            # §13.2: FROM/FROM NAMED define the dataset exactly — the
-            # description draws only from it (DESCRIBE <x> FROM
-            # <nonexistent> is empty; reference httpd golden 'describe')
-            gs = list(self.from_graphs or []) + list(self.from_named or [])
-            src = src.where(F.col("g").isin(gs))
         return src.join(
             subjects, src["s"] == subjects["__subj"], "left_semi"
         ).drop("g")

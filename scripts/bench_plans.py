@@ -13,6 +13,11 @@ The q1-q5 plans are written twice: over ``SparqlEngine.from_store`` (its
 stars read the property table) and, as <query>_plain_<suffix>.txt, over
 a plain engine on the same store's quads (the served engine's shape: its
 stars group the quads).
+
+The ten endpoint read shapes (``perfbench.mix.READ_BLOCK``, the reads of
+``Mix(ENDPOINT_SEED, 0.001).warmup()``) are written as
+ep_<shape>_plain_<suffix>.txt over the plain engine: the plan of the
+result DataFrame each served read serializes.
 """
 
 from __future__ import annotations
@@ -26,6 +31,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+ENDPOINT_SEED = 1  # the perfbench.mix seed of the endpoint read shapes
+
+
+def endpoint_reads() -> dict:
+    """shape -> SPARQL text of the endpoint workload's warm-up reads
+    (one per shape, in READ_BLOCK order)."""
+    from urllib.parse import parse_qs
+
+    from perfbench import mix
+
+    reads = [r for r in mix.Mix(ENDPOINT_SEED, 0.001).warmup() if r.kind == "read"]
+    out = {}
+    for shape, r in zip(dict.fromkeys(mix.READ_BLOCK), reads):
+        form = r.body if r.method == "POST" else r.path.split("?", 1)[1]
+        out[shape] = parse_qs(form)["query"][0]
+    return out
 
 
 def main() -> None:
@@ -119,6 +141,9 @@ def main() -> None:
                 lambda eng=eng, text=text, types=types:
                 eng.query(text).flat(**types)
             )
+    plain = engines["_plain"]
+    for shape, text in endpoint_reads().items():
+        dfs[f"ep_{shape}_plain"] = lambda text=text: plain.query(text).df
     dfs.update({
         "q6_minhash": lambda: minhash_lsh_candidates(
             docs, "text", "doc_id", num_hashes=32, bands=8

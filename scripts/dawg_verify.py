@@ -19,7 +19,7 @@ from itertools import permutations
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _TERM_RE = re.compile(
-    r'<[^>]*>|_:[^\s]+|"(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[A-Za-z0-9-]+)?'
+    r'<[^>]*>|_:[^\s]*[^\s.]|"(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[A-Za-z0-9-]+)?'
 )
 
 
